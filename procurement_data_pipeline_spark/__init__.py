@@ -9,8 +9,11 @@ text analysis) designed for 100 TB scale.
 Layout:
   session       SparkSession factory (AQE, Arrow, UTC, shuffle sizing)
   registry      declared-query registry (Spark builder + DuckDB oracle SQL)
+  storage       the only Hadoop-FileSystem caller: plain-Python file ops,
+                checked rename, create-no-overwrite publish, archive copy
   sources/      table loaders + procurement-shaped derived views
-  operators/    reference-parity relational operators (SURVEY.md §2)
+  operators/    reference-parity relational operators (SURVEY.md §2);
+                operators/tablelog is the versioned-table log format
   functions/    scalar/text/vector column helpers
   llm_ops/      dedup, similarity search, multimodal, text analysis
   streaming/    Structured Streaming analogues of the batch operators

@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from procurement_data_pipeline_spark import storage
+
 RAW_ORDERS = "raw/orders"
 RAW_STOCK = "raw/stock"
 PROCESSED = "processed"
@@ -54,21 +56,13 @@ class Warehouse:
             .parquet(path)
         )
 
-    def write_orders(self, orders: DataFrame, stage_csv: bool = False) -> None:
+    def write_orders(self, orders: DataFrame) -> None:
         """Partitioned parquet write: one call replaces the reference's
         generate-CSV → pyarrow → WebHDFS upload chain
         (hdfs_upload_data_dag.py:122-221)."""
-        if stage_csv:
-            orders.write.mode("overwrite").option("header", True).csv(
-                self.path("staging", "orders")
-            )
         self._write_partitioned(orders, "order_date", self.path(RAW_ORDERS))
 
-    def write_inventory(self, inventory: DataFrame, stage_csv: bool = False) -> None:
-        if stage_csv:
-            inventory.write.mode("overwrite").option("header", True).csv(
-                self.path("staging", "stock")
-            )
+    def write_inventory(self, inventory: DataFrame) -> None:
         self._write_partitioned(inventory, "snapshot_date", self.path(RAW_STOCK))
 
     def read_orders(self, spark: SparkSession) -> DataFrame:
@@ -136,12 +130,9 @@ def recover_swap(spark: SparkSession, path: str) -> bool:
     restores the last complete state instead of presenting an empty
     table. Returns True if a parked directory was restored.
     """
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__old")
-    if not fs.exists(root) and fs.exists(old):
-        fs.rename(old, root)
+    old = path.rstrip("/") + "__old"
+    if not storage.exists(spark, path) and storage.exists(spark, old):
+        storage.rename(spark, old, path)
         return True
     return False
 
@@ -160,32 +151,18 @@ def swap_dir(spark: SparkSession, tmp_path: str, path: str) -> None:
     is atomic on hdfs:// and file://; on object stores it is a copy —
     slower, same recovery story.
     """
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp = jvm.org.apache.hadoop.fs.Path(tmp_path)
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__old")
-    # every rename is CHECKED (code-review r8): Hadoop FileSystem.rename
-    # reports failure by returning False, not raising — an unchecked
-    # failed park would strand the replacement in tmp while the caller
-    # believes it committed, and an unchecked failed promote would let
-    # the final delete below destroy the parked (only) copy of the state.
-    if not fs.exists(root) and fs.exists(old):
-        # an earlier swap crashed after parking: __old IS the live state
-        if not fs.rename(old, root):
-            raise IOError(f"swap_dir: could not restore parked state to {path}")
-    if fs.exists(old):  # root exists too → parked copy is superseded garbage
-        fs.delete(old, True)
-    if fs.exists(root):
-        if not fs.rename(root, old):
-            raise IOError(f"swap_dir: could not park live state of {path}")
-    if not fs.rename(tmp, root):
-        # root is vacant (we just parked it) — recover_swap will restore
-        # __old on the next touch; surface the failure instead of letting
-        # the trailing delete run
-        raise IOError(f"swap_dir: could not promote {tmp_path} to {path}")
-    if fs.exists(old):
-        fs.delete(old, True)
+    old = path.rstrip("/") + "__old"
+    # every rename is CHECKED: an unchecked failed park would strand the
+    # replacement in tmp while the caller believes it committed, and an
+    # unchecked failed promote would let the final delete below destroy
+    # the parked (only) copy of the state. A failed promote leaves root
+    # vacant — recover_swap restores __old on the next touch.
+    recover_swap(spark, path)  # an earlier swap crashed after parking
+    storage.delete(spark, old, True)  # any __old left now is superseded
+    if storage.exists(spark, path):
+        storage.rename(spark, path, old)
+    storage.rename(spark, tmp_path, path)
+    storage.delete(spark, old, True)
 
 
 def write_bucketed_table(
@@ -231,15 +208,7 @@ def compact_dir(
     or object storage where ``os.walk``/``shutil`` silently see nothing.
     """
     df = spark.read.parquet(path)
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    size = 0
-    it = fs.listFiles(root, True)  # recursive
-    while it.hasNext():
-        status = it.next()
-        if status.getPath().getName().endswith(".parquet"):
-            size += status.getLen()
+    size = sum(storage.list_parquet_files(spark, path).values())
     n_files = max(1, -(-size // target_file_bytes))
     tmp_str = path.rstrip("/") + "__compacting"
     df.repartition(n_files).write.mode("overwrite").parquet(tmp_str)
@@ -411,20 +380,7 @@ def merge_upsert(
 
     Existence probe and the swap use the Hadoop FileSystem API so the
     upsert works wherever the table lives (file://, hdfs://, s3a://)."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def _has_parquet() -> bool:
-        if not fs.exists(root):
-            return False
-        it = fs.listFiles(root, True)
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                return True
-        return False
-
-    if _has_parquet():
+    if storage.exists(spark, path) and storage.list_parquet_files(spark, path):
         existing = spark.read.parquet(path)
         # NULL-SAFE anti-join (code-review r8): with plain key equality an
         # existing NULL-key row never matches the updates' NULL-key row

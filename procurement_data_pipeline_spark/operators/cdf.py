@@ -29,10 +29,10 @@ from pyspark.sql import functions as F
 
 from procurement_data_pipeline_spark.operators.cdc import snapshot_diff
 from procurement_data_pipeline_spark.operators.versioning import (
-    _read_manifest,
-    _resolve_manifest,
     latest_version,
+    read_manifest,
     read_table,
+    resolve_manifest,
 )
 
 
@@ -68,9 +68,8 @@ def table_changes(
     (the same non-monotonic-clock adjustment as ``TIMESTAMP AS OF``).
     """
     from procurement_data_pipeline_spark.operators.versioning import (
-        _list_versions,
-        _read_manifest as _raw_manifest,
         _ts_to_ms,
+        list_versions,
         version_as_of_timestamp,
     )
 
@@ -78,7 +77,7 @@ def table_changes(
         if from_version is not None:
             raise ValueError("pass from_version OR from_timestamp, not both")
         t = _ts_to_ms(from_timestamp)
-        versions = _list_versions(spark, table_path)
+        versions = list_versions(spark, table_path)
         if not versions:
             raise ValueError(f"no versions published at {table_path}")
         first_at_or_after = None
@@ -86,7 +85,7 @@ def table_changes(
         for v in versions:
             eff = max(
                 eff,
-                int(_raw_manifest(spark, table_path, v).get(
+                int(read_manifest(spark, table_path, v).get(
                     "committed_at_ms", 0
                 )),
             )
@@ -129,7 +128,7 @@ def table_changes(
         adds: list[str] = []
         fast = True
         for v in range(from_version + 1, to_version + 1):
-            raw = _read_manifest(spark, table_path, v)
+            raw = read_manifest(spark, table_path, v)
             if (
                 raw.get("op") != "append"
                 or "delta_of" not in raw
@@ -143,9 +142,9 @@ def table_changes(
             added = sorted(adds)
     bootstrap = from_version == 0
     if added is None and not bootstrap:
-        old_man = _resolve_manifest(spark, table_path, from_version)
+        old_man = resolve_manifest(spark, table_path, from_version)
         old_files = set(old_man["files"])
-        new_man = _resolve_manifest(spark, table_path, to_version)
+        new_man = resolve_manifest(spark, table_path, to_version)
         new_files = set(new_man["files"])
         # a merge-on-read delete changes NO data file — the file-subset
         # test alone would report an empty insert feed for a range that
@@ -185,7 +184,7 @@ def table_changes(
 
             man_schema = _ST.fromJson(
                 json.loads(
-                    _read_manifest(spark, table_path, to_version)["schema"]
+                    read_manifest(spark, table_path, to_version)["schema"]
                 )
             )
             base = _read_data_files(spark, man_schema, added)
@@ -262,7 +261,7 @@ def _native_mor_feed(
     per_version: list[tuple] = []  # (v, adds, new_entries)
     prev_resolved: dict | None = None
     for v in range(from_version + 1, to_version + 1):
-        raw = _read_manifest(spark, table_path, v)
+        raw = read_manifest(spark, table_path, v)
         op = raw.get("op")
         mor = op == "merge" and (
             raw.get("merge", {}).get("strategy") == "merge-on-read"
@@ -278,7 +277,7 @@ def _native_mor_feed(
                 return None
         else:
             if prev_resolved is None or prev_resolved["version"] != v - 1:
-                prev_resolved = _resolve_manifest(spark, table_path, v - 1)
+                prev_resolved = resolve_manifest(spark, table_path, v - 1)
             prev_files = set(prev_resolved["files"])
             if not prev_files <= set(raw["files"]):
                 return None  # something removed: not pure growth
@@ -301,7 +300,7 @@ def _native_mor_feed(
             return None
     # schema / mapping of the range end pins names for the whole feed
     end_schema = _ST.fromJson(
-        json.loads(_read_manifest(spark, table_path, to_version)["schema"])
+        json.loads(read_manifest(spark, table_path, to_version)["schema"])
     )
     rev = {p: l for l, p in _phys_map(end_schema).items()}
     logical_keys = (
@@ -350,7 +349,7 @@ def _native_mor_feed(
             )
             .distinct()
         )
-        man_prev = _resolve_manifest(spark, table_path, v - 1)
+        man_prev = resolve_manifest(spark, table_path, v - 1)
         prev_schema = _ST.fromJson(json.loads(man_prev["schema"]))
         kept = list(man_prev["files"])
         fk = logical_keys[0]

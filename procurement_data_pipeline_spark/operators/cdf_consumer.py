@@ -31,27 +31,28 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from procurement_data_pipeline_spark import storage
+from procurement_data_pipeline_spark.operators import tablelog
 from procurement_data_pipeline_spark.operators.cdf import table_changes
-from procurement_data_pipeline_spark.operators.erasure import (
-    _fs_path,
-    _read_text,
-    _write_text,
-)
 from procurement_data_pipeline_spark.operators.versioning import (
     latest_version,
 )
 
+_CURSOR_PREFIX = "cursor-v"
 
-def _cursor_versions(spark: SparkSession, cursor_path: str) -> list[int]:
-    fs, p, _ = _fs_path(spark, cursor_path)
-    if not fs.exists(p):
-        return []
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if name.startswith("cursor-v") and name.endswith(".json"):
-            out.append(int(name[len("cursor-v") : -5]))
-    return sorted(out)
+
+def _cursor_file(cursor_path: str, version: int) -> str:
+    return f"{cursor_path.rstrip('/')}/{_CURSOR_PREFIX}{version:08d}.json"
+
+
+def cursor_versions(spark: SparkSession, cursor_path: str) -> list[int]:
+    """The versions of the cursor files under ``cursor_path``, ascending
+    (names that are not ``cursor-v{N}.json`` are skipped)."""
+    return tablelog.versions(storage.list_names(spark, cursor_path), _CURSOR_PREFIX)
+
+
+def _stored_version(spark: SparkSession, cursor_file: str) -> int:
+    return int(json.loads(storage.read_text(spark, cursor_file))["version"])
 
 
 # cursor paths this process has already seen in directory form — once a
@@ -65,7 +66,7 @@ def _migrate_legacy_cursor(spark: SparkSession, cursor_path: str) -> None:
     """Releases before the directory scheme stored the cursor as ONE json
     FILE at ``cursor_path``. Left in place it is invisible to the
     directory listing (read would report 0 and replay every range ever
-    handled) and ``_advance_cursor`` would fail mkdirs over it. Migration
+    handled) and ``advance_cursor`` would fail over it. Migration
     is crash-safe in two steps: park the file under a sibling name (so
     the path can become a directory), then commit it as the first
     ``cursor-v{N}.json``. A crash between the steps leaves the sibling,
@@ -80,15 +81,12 @@ def _migrate_legacy_cursor(spark: SparkSession, cursor_path: str) -> None:
     key = cursor_path.rstrip("/")
     if key in _MIGRATED:
         return
-    fs, p, jvm = _fs_path(spark, cursor_path)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    legacy_str = key + ".legacy-migrating"
-    legacy = hpath(legacy_str)
-    if (
-        fs.exists(legacy)
-        and fs.exists(p)
-        and fs.getFileStatus(p).isFile()
-    ):
+    legacy = key + ".legacy-migrating"
+
+    def _is_file(uri: str) -> bool:
+        return storage.exists(spark, uri) and not storage.is_dir(spark, uri)
+
+    if storage.exists(spark, legacy) and _is_file(cursor_path):
         # wedge state (code-review r8): a migration crashed after parking
         # the sibling, then an old-version process RECREATED the
         # single-file cursor — rename(p, legacy) would now fail on every
@@ -97,42 +95,41 @@ def _migrate_legacy_cursor(spark: SparkSession, cursor_path: str) -> None:
         # holds the SMALLER version; a crash between these steps still
         # leaves the larger version on disk, so no committed range is
         # ever lost (worst case: one at-least-once replay).
-        v_file = int(json.loads(_read_text(spark, key))["version"])
-        v_sib = int(json.loads(_read_text(spark, legacy_str))["version"])
-        if v_file >= v_sib:
-            fs.delete(legacy, False)
+        if _stored_version(spark, cursor_path) >= _stored_version(spark, legacy):
+            storage.delete(spark, legacy)
         else:
-            fs.delete(p, False)
-    if fs.exists(p) and fs.getFileStatus(p).isDirectory():
+            storage.delete(spark, cursor_path)
+    if storage.is_dir(spark, cursor_path):
         # already migrated; clean a leftover sibling from a crash between
         # the directory commit and the sibling delete, then memoize
-        fs.delete(legacy, False)
+        storage.delete(spark, legacy)
         _MIGRATED.add(key)
         return
-    if fs.exists(p) and fs.getFileStatus(p).isFile():
-        if not fs.rename(p, legacy):
-            still_file = fs.exists(p) and fs.getFileStatus(p).isFile()
-            if still_file:
+    if _is_file(cursor_path):
+        try:
+            storage.rename(spark, cursor_path, legacy)
+        except IOError:
+            if _is_file(cursor_path):
                 raise IOError(
                     f"could not migrate legacy cursor file {cursor_path}"
-                )
+                ) from None
             # another migrator parked it first — fall through; the
             # sibling (if it still exists) is finished below
-    if fs.exists(legacy):
-        version = int(json.loads(_read_text(spark, legacy_str))["version"])
+    if storage.exists(spark, legacy):
+        version = _stored_version(spark, legacy)
         if version > 0:
-            _advance_cursor(spark, cursor_path, version)
+            advance_cursor(spark, cursor_path, version)
         else:
-            fs.mkdirs(p)
-        fs.delete(legacy, False)
+            storage.mkdirs(spark, cursor_path)
+        storage.delete(spark, legacy)
         _MIGRATED.add(key)  # migration committed — the path is a directory
     # Fall-through (path absent, no parked sibling): nothing to migrate YET
     # — deliberately NOT memoized. A not-yet-created cursor can still gain
     # a legacy single-file cursor from an old-version writer in a rolling
     # deploy; memoizing here would hide that file from every later poll of
     # this process (read_cursor would report 0 and replay handled ranges,
-    # and _advance_cursor's mkdirs would fail over the file). The probe
-    # stays cheap: the first _advance_cursor creates the directory and the
+    # and advance_cursor would fail over the file). The probe
+    # stays cheap: the first advance_cursor creates the directory and the
     # next poll memoizes through the directory branch above.
 
 
@@ -150,12 +147,11 @@ def read_cursor(spark: SparkSession, cursor_path: str) -> int:
     """
     _migrate_legacy_cursor(spark, cursor_path)
     for _ in range(3):
-        vs = _cursor_versions(spark, cursor_path)
+        vs = cursor_versions(spark, cursor_path)
         if not vs:
             return 0
-        latest = f"{cursor_path.rstrip('/')}/cursor-v{vs[-1]:08d}.json"
         try:
-            return int(json.loads(_read_text(spark, latest))["version"])
+            return _stored_version(spark, _cursor_file(cursor_path, vs[-1]))
         except Exception:
             # list-then-read race (code-review r8): a faster consumer
             # committed a newer cursor and pruned the file we just
@@ -166,46 +162,36 @@ def read_cursor(spark: SparkSession, cursor_path: str) -> int:
     raise IOError(f"cursor at {cursor_path} kept vanishing during read")
 
 
-def _advance_cursor(spark: SparkSession, cursor_path: str, version: int) -> None:
-    # write a NEW cursor file via tmp + rename-to-fresh-name (atomic on
-    # file:// and hdfs:// — the destination never pre-exists), then prune
-    # superseded files; a crash mid-prune just leaves harmless extras
+def advance_cursor(spark: SparkSession, cursor_path: str, version: int) -> None:
+    """Commit ``version`` as the cursor at ``cursor_path``: publish a NEW
+    ``cursor-v{N}.json`` (the destination never pre-exists), then prune
+    superseded files; a crash mid-prune just leaves harmless extras."""
+    final = _cursor_file(cursor_path, version)
     tmp = f"{cursor_path.rstrip('/')}/.tmp-{version}"
-    final = f"{cursor_path.rstrip('/')}/cursor-v{version:08d}.json"
-    fs, dir_p, jvm = _fs_path(spark, cursor_path)
-    fs.mkdirs(dir_p)
-    _write_text(spark, tmp, json.dumps({"version": version}))
-    hpath = jvm.org.apache.hadoop.fs.Path
-    if not fs.rename(hpath(tmp), hpath(final)):
-        fs.delete(hpath(tmp), False)
+    if not storage.publish(spark, tmp, final, json.dumps({"version": version})):
         # a cursor file's content is fully determined by its name
-        # ({"version": N}), so losing the rename to a concurrent consumer
+        # ({"version": N}), so losing the claim to a concurrent consumer
         # that committed the SAME version is success, not failure
-        if not fs.exists(hpath(final)):
+        if not storage.exists(spark, final):
             # ... and losing to a FASTER consumer is success too
             # (code-review r8): its sweep may have deleted our in-flight
             # tmp (tv <= its version), but the cursor then stands AT OR
             # PAST our target — raising here would report a hard failure
             # for a fully-handled, fully-recorded range. The winner owns
             # prune + sweep; we are done.
-            vs = _cursor_versions(spark, cursor_path)
+            vs = cursor_versions(spark, cursor_path)
             if vs and vs[-1] >= version:
                 return
             raise IOError(f"could not advance cursor at {cursor_path}")
-    for v in _cursor_versions(spark, cursor_path)[:-1]:
-        fs.delete(hpath(f"{cursor_path.rstrip('/')}/cursor-v{v:08d}.json"), False)
-    # sweep torn .tmp-{v} files a crash left behind — safe once the rename
+    for v in cursor_versions(spark, cursor_path)[:-1]:
+        storage.delete(spark, _cursor_file(cursor_path, v))
+    # sweep torn .tmp-{v} files a crash left behind — safe once the claim
     # for a version ≤ ours has committed (ours just did); a .tmp for a
     # NEWER version (concurrent writer mid-flight) is left alone
-    for st in fs.listStatus(dir_p):
-        name = st.getPath().getName()
-        if name.startswith(".tmp-"):
-            try:
-                tv = int(name[len(".tmp-"):])
-            except ValueError:
-                continue
-            if tv <= version:
-                fs.delete(st.getPath(), False)
+    for e in storage.list_dir(spark, cursor_path):
+        tv = tablelog.parse_version(e.name, ".tmp-", "")
+        if tv is not None and tv <= version:
+            storage.delete(spark, e.uri)
 
 
 def consume_changes(
@@ -229,8 +215,8 @@ def consume_changes(
     )
     handler(feed, cursor, latest)
     # the commit point: only a fully-handled range advances the cursor
-    _advance_cursor(spark, cursor_path, latest)
+    advance_cursor(spark, cursor_path, latest)
     return {"from_version": cursor, "to_version": latest, "invoked": True}
 
 
-__all__ = ["consume_changes", "read_cursor"]
+__all__ = ["advance_cursor", "consume_changes", "cursor_versions", "read_cursor"]

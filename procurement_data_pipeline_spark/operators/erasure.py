@@ -42,65 +42,34 @@ from collections.abc import Sequence
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from procurement_data_pipeline_spark.operators.fileindex import (
-    _list_parquet_files,
-    footer_stats,
-)
+from procurement_data_pipeline_spark import storage
+from procurement_data_pipeline_spark.operators.fileindex import footer_stats
 
 _TMP_SUFFIX = "__erase_tmp"
 _PARK_SUFFIX = "__erase_parked"
 _MANIFEST = "_ERASE_MANIFEST.json"
 
 
-def _fs_path(spark: SparkSession, p: str):
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(p)
-    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path, jvm
-
-
-def _write_text(spark: SparkSession, uri: str, text: str) -> None:
-    fs, path, _ = _fs_path(spark, uri)
-    out = fs.create(path, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _read_text(spark: SparkSession, uri: str) -> str:
-    # NB: a py4j byte[] argument is copied, not shared — stream.read(buf)
-    # can never fill a Python bytearray. Drain the stream JVM-side.
-    fs, path, jvm = _fs_path(spark, uri)
-    stream = fs.open(path)
-    try:
-        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
+def _child(dir_uri: str, file_uri: str) -> str:
+    """``dir_uri``'s entry with the same basename as ``file_uri``."""
+    return dir_uri.rstrip("/") + "/" + file_uri.rsplit("/", 1)[-1]
 
 
 def _replay_commit(spark: SparkSession, path: str) -> None:
     """Forward-replay a committed swap: park manifest sources still live,
     promote remaining replacement files, drop parked + tmp. Idempotent."""
     tmp, park = path.rstrip("/") + _TMP_SUFFIX, path.rstrip("/") + _PARK_SUFFIX
-    fs, live_p, jvm = _fs_path(spark, path)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    park_p = hpath(park)
-    fs.mkdirs(park_p)
-    sources = json.loads(_read_text(spark, tmp.rstrip("/") + "/" + _MANIFEST))
+    storage.mkdirs(spark, park)
+    sources = json.loads(storage.read_text(spark, tmp + "/" + _MANIFEST))
     for uri in sources:
-        src = hpath(uri)
-        if fs.exists(src):
-            if not fs.rename(src, hpath(park_p, src.getName())):
-                raise IOError(f"failed to park {uri}")
-    for f in _list_parquet_files(spark, tmp):
-        src = hpath(f)
-        dst = hpath(live_p, src.getName())
-        if fs.exists(dst):
-            continue  # already promoted by the crashed run
-        if not fs.rename(src, dst):
-            raise IOError(f"failed to promote {f}")
-    fs.delete(park_p, True)
-    fs.delete(hpath(tmp), True)
+        if storage.exists(spark, uri):
+            storage.rename(spark, uri, _child(park, uri))
+    for f in storage.list_parquet_files(spark, tmp):
+        dst = _child(path, f)
+        if not storage.exists(spark, dst):  # else promoted by the crashed run
+            storage.rename(spark, f, dst)
+    storage.delete(spark, park, True)
+    storage.delete(spark, tmp, True)
 
 
 def recover_erasure(spark: SparkSession, path: str) -> bool:
@@ -111,27 +80,25 @@ def recover_erasure(spark: SparkSession, path: str) -> bool:
     next attempt (or on an explicit call from an ops runbook).
     """
     tmp, park = path.rstrip("/") + _TMP_SUFFIX, path.rstrip("/") + _PARK_SUFFIX
-    fs, _, jvm = _fs_path(spark, path)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    tmp_exists = fs.exists(hpath(tmp))
-    park_exists = fs.exists(hpath(park))
+    tmp_exists = storage.exists(spark, tmp)
+    park_exists = storage.exists(spark, park)
     if not tmp_exists and not park_exists:
         return False
-    if tmp_exists and fs.exists(hpath(tmp.rstrip("/") + "/" + _MANIFEST)):
+    if tmp_exists and storage.exists(spark, tmp + "/" + _MANIFEST):
         _replay_commit(spark, path)  # committed → forward
         return True
     # Not committed: the live directory was never modified. Restore any
     # parked strays (defensive — pre-commit runs never park), drop tmp.
+    # The restore is checked: the park directory may hold the only copy
+    # of those rows, so a failed move must stop before it is deleted.
     if park_exists:
-        _, live_p, _ = _fs_path(spark, path)
-        for f in _list_parquet_files(spark, park):
-            src = hpath(f)
-            dst = hpath(live_p, src.getName())
-            if not fs.exists(dst):
-                fs.rename(src, dst)
-        fs.delete(hpath(park), True)
+        for f in storage.list_parquet_files(spark, park):
+            dst = _child(path, f)
+            if not storage.exists(spark, dst):
+                storage.rename(spark, f, dst)
+        storage.delete(spark, park, True)
     if tmp_exists:
-        fs.delete(hpath(tmp), True)
+        storage.delete(spark, tmp, True)
     return True
 
 
@@ -183,18 +150,11 @@ def erase_users(
     # strand replacements in the wrong directory (same-basename files
     # could even collide mid-swap). Refuse loudly instead of corrupting;
     # erase partitioned tables partition-by-partition at the leaf dirs.
-    fs, _live_p, jvm = _fs_path(spark, path)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    live_dir = fs.makeQualified(hpath(path)).toUri().getPath().rstrip("/")
+    live_dir = storage.qualify(spark, path).rstrip("/")
     nested = [
         r["file"]
         for r in candidates
-        if fs.makeQualified(hpath(r["file"]))
-        .getParent()
-        .toUri()
-        .getPath()
-        .rstrip("/")
-        != live_dir
+        if storage.qualify(spark, r["file"]).rsplit("/", 1)[0] != live_dir
     ]
     if nested:
         raise ValueError(
@@ -214,8 +174,7 @@ def erase_users(
         return audit
 
     tmp = path.rstrip("/") + _TMP_SUFFIX
-    fs, _, jvm = _fs_path(spark, path)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)  # stale pre-commit junk
+    storage.delete(spark, tmp, True)  # stale pre-commit junk
     # NULL-keyed rows are never erasure targets: ~isin over NULL is NULL
     # (falsy) and would silently DELETE them — the same guard merge_into's
     # isin path carries (code-review r8: this was a real data-loss hole)
@@ -229,10 +188,8 @@ def erase_users(
     )
     # Commit point: manifest in place → the swap below (or any future
     # recover_erasure) completes exactly once.
-    _write_text(
-        spark,
-        tmp.rstrip("/") + "/" + _MANIFEST,
-        json.dumps([r["file"] for r in candidates]),
+    storage.write_text(
+        spark, tmp + "/" + _MANIFEST, json.dumps([r["file"] for r in candidates])
     )
     _replay_commit(spark, path)
     audit["rows_after"] = rows_after

@@ -19,6 +19,8 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from procurement_data_pipeline_spark import storage
+
 
 def supplier_orders(net_demand: DataFrame, order_date: str, data_date: str) -> DataFrame:
     """net_demand rows → one nested row per supplier.
@@ -54,23 +56,6 @@ def supplier_orders(net_demand: DataFrame, order_date: str, data_date: str) -> D
     )
 
 
-def _write_text_hadoop(spark, path_str: str, text: str) -> None:
-    """Create/overwrite a small text file through the Hadoop FileSystem API
-    (parents auto-created), so the JSON sinks work wherever the warehouse
-    lives — file://, hdfs://, s3a:// — like every other warehouse write."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    # No .crc sidecars for the JSON exports: consumers list the directory
-    # and expect exactly the supplier_*.json files the reference writes.
-    fs.setWriteChecksum(False)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
 def write_supplier_json(
     supplier_orders_df: DataFrame, out_dir: str, generated_at: str | None = None
 ) -> list[str]:
@@ -78,7 +63,10 @@ def write_supplier_json(
 
     The row set is one-per-supplier — a declared, bounded export boundary —
     so a driver-side collect here is the Spark analogue of the reference's
-    XCom hop, not a scalability bug.
+    XCom hop, not a scalability bug. Files are written through the Hadoop
+    FileSystem (file://, hdfs://, s3a://) without checksum sidecars:
+    consumers list the directory and expect exactly the supplier_*.json
+    files the reference writes.
     """
     generated_at = generated_at or datetime.now(timezone.utc).isoformat()
     spark = supplier_orders_df.sparkSession
@@ -103,7 +91,7 @@ def write_supplier_json(
             "total_estimated_cost": round(float(row["total_estimated_cost"]), 2),
         }
         path = out_dir.rstrip("/") + f"/supplier_{doc['supplier_id']}.json"
-        _write_text_hadoop(spark, path, json.dumps(doc, indent=2))
+        storage.write_bare_text(spark, path, json.dumps(doc, indent=2))
         paths.append(path)
     return paths
 
@@ -116,7 +104,7 @@ def write_exceptions_json(exceptions_df: DataFrame, out_path: str, date: str) ->
         {"type": r["type"], "severity": r["severity"], "product_id": int(r["product_id"])}
         for r in exceptions_df.collect()
     ]
-    _write_text_hadoop(
+    storage.write_bare_text(
         exceptions_df.sparkSession,
         out_path,
         json.dumps(

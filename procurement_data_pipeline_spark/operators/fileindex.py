@@ -31,19 +31,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _list_parquet_files(spark: SparkSession, path: str) -> list[str]:
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    out: list[str] = []
-    it = fs.listFiles(root, True)  # recursive
-    while it.hasNext():
-        status = it.next()
-        p = status.getPath()
-        if p.getName().endswith(".parquet"):
-            out.append(p.toString())
-    return out
+from procurement_data_pipeline_spark import storage
 
 
 def _open_target(uri: str) -> tuple:
@@ -85,7 +73,7 @@ def footer_stats(
     treats NULL as "cannot prune", never as "skip", so missing stats
     degrade to a full scan, not wrong results.
     """
-    files = path if isinstance(path, list) else _list_parquet_files(spark, path)
+    files = path if isinstance(path, list) else list(storage.list_parquet_files(spark, path))
     col_types = col_types or {}
 
     def _sql_type(c: str) -> str:
@@ -172,7 +160,7 @@ def quarantine_corrupt_files(
     fold it back in manually — the move is rename-based, content
     untouched.
     """
-    files = _list_parquet_files(spark, path)
+    files = list(storage.list_parquet_files(spark, path))
     if not files:
         return []
 
@@ -209,19 +197,11 @@ def quarantine_corrupt_files(
     ]
     if not bad:
         return []
-    jvm = spark._jvm
-    qroot = jvm.org.apache.hadoop.fs.Path(quarantine_dir)
-    fs = qroot.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(qroot)
+    storage.mkdirs(spark, quarantine_dir)
     for uri in bad:
-        src = jvm.org.apache.hadoop.fs.Path(uri)
-        dst = jvm.org.apache.hadoop.fs.Path(qroot, src.getName())
-        # Hadoop rename reports failure via its return value, not an
-        # exception (existing destination, cross-filesystem move) — a
-        # corrupt file we could not actually move must not be reported
-        # as repaired.
-        if not fs.rename(src, dst):
-            raise IOError(f"failed to quarantine {uri} -> {dst}")
+        # checked rename: a corrupt file we could not actually move must
+        # not be reported as repaired
+        storage.rename(spark, uri, quarantine_dir.rstrip("/") + "/" + uri.rsplit("/", 1)[-1])
     return bad
 
 

@@ -27,6 +27,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from procurement_data_pipeline_spark import storage
+
 
 def incremental_refresh(
     spark: SparkSession,
@@ -76,29 +78,17 @@ def incremental_refresh(
         str(r[0])
         for r in rows.select(F.col(partition_col).cast("string")).distinct().collect()
     }
-    # Go through the Hadoop FileSystem API (not os/shutil) so the drop works
-    # on whatever filesystem the rollup actually lives on — local file://,
-    # hdfs://, s3a:// — matching the writer above, which also resolves
-    # rollup_path through Hadoop.
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(rollup_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    # storage (not os/shutil) so the drop works on whatever filesystem the
+    # rollup actually lives on — local file://, hdfs://, s3a:// — matching
+    # the writer above, which also resolves rollup_path through Hadoop.
     for d in dates:
         if d not in present:
-            stale = jvm.org.apache.hadoop.fs.Path(root, f"{partition_col}={d}")
-            if fs.exists(stale):
-                fs.delete(stale, True)  # recursive
+            storage.delete(spark, f"{rollup_path.rstrip('/')}/{partition_col}={d}", True)
     # a refresh can legitimately leave the rollup EMPTY (only partition
     # vanished): spark.read would fail schema inference on a dataless
     # directory — honor the docstring's "including absence" with an
     # empty frame of the rollup's own schema (code-review r8)
-    it = fs.listFiles(root, True)
-    has_data = False
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            has_data = True
-            break
-    if not has_data:
+    if not storage.list_parquet_files(spark, rollup_path):
         return spark.createDataFrame([], rows.schema)
     return spark.read.parquet(rollup_path)
 

@@ -39,11 +39,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from procurement_data_pipeline_spark import storage
 from procurement_data_pipeline_spark.catalog import recover_swap, swap_dir
-from procurement_data_pipeline_spark.operators.fileindex import (
-    _list_parquet_files,
-    footer_stats,
-)
+from procurement_data_pipeline_spark.operators.fileindex import footer_stats
 
 _MANIFEST = "_ivm_manifest"
 
@@ -59,19 +57,10 @@ def _read_manifest(spark: SparkSession, view_path: str) -> dict:
     # refresh would then rewrite a COMMITTED delta directory in place —
     # corrupting the view the real manifest still references. Missing dir
     # → genuinely first refresh; anything else propagates.
-    from procurement_data_pipeline_spark.operators.versioning import _fs_path
-
-    fs, p, _ = _fs_path(spark, _manifest_path(view_path))
-    if not fs.exists(p):
+    path = _manifest_path(view_path)
+    if not storage.exists(spark, path) or not storage.list_parquet_files(spark, path):
         return {"a_files": [], "b_files": [], "deltas": []}
-    files = _list_parquet_files(spark, _manifest_path(view_path))
-    if not files:
-        return {"a_files": [], "b_files": [], "deltas": []}
-    [row] = (
-        spark.read.parquet(_manifest_path(view_path))
-        .select("payload")
-        .collect()
-    )
+    [row] = spark.read.parquet(path).select("payload").collect()
     return json.loads(row["payload"])
 
 
@@ -98,8 +87,8 @@ def refresh_join_view(
     refresh is invisible and the next run redoes its work exactly once.
     """
     man = _read_manifest(spark, view_path)
-    a_now = sorted(_list_parquet_files(spark, a_path))
-    b_now = sorted(_list_parquet_files(spark, b_path))
+    a_now = sorted(storage.list_parquet_files(spark, a_path))
+    b_now = sorted(storage.list_parquet_files(spark, b_path))
     known_a, known_b = set(man["a_files"]), set(man["b_files"])
     gone_a = known_a - set(a_now)
     gone_b = known_b - set(b_now)

@@ -353,7 +353,7 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
             version = V.latest_version(spark, args[0])
             if version is None:
                 raise ValueError(f"no versions published at {args[0]}")
-        man = V._resolve_manifest(spark, args[0], version)
+        man = V.resolve_manifest(spark, args[0], version)
         cons = man.get("constraints", [])
         return spark.createDataFrame(
             [(i, c) for i, c in enumerate(cons)], "position int, expr string"

@@ -44,17 +44,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
 
-from procurement_data_pipeline_spark.operators.erasure import (
-    _fs_path,
-    _read_text,
-    _write_text,
-)
-from procurement_data_pipeline_spark.operators.fileindex import (
-    _list_parquet_files,
-)
-
-_LOG_DIR = "_log"
-_VERSION_WIDTH = 8  # v00000001.json … — lexicographic == numeric order
+from procurement_data_pipeline_spark import storage
+from procurement_data_pipeline_spark.operators import tablelog
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -62,36 +53,29 @@ class ConcurrentWriteError(RuntimeError):
     of the new latest version."""
 
 
-def _log_path(table_path: str) -> str:
-    return table_path.rstrip("/") + "/" + _LOG_DIR
+def _log(spark: SparkSession, table_path: str) -> tablelog.TableLog:
+    return tablelog.TableLog(
+        table_path,
+        exists=lambda uri: storage.exists(spark, uri),
+        read_text=lambda uri: storage.read_text(spark, uri),
+        list_names=lambda uri: storage.list_names(spark, uri),
+    )
 
 
-def _manifest_uri(table_path: str, version: int) -> str:
-    return f"{_log_path(table_path)}/v{version:0{_VERSION_WIDTH}d}.json"
+def list_versions(spark: SparkSession, table_path: str) -> list[int]:
+    """Every published version number of the table, ascending."""
+    return _log(spark, table_path).versions()
 
 
-def _list_versions(spark: SparkSession, table_path: str) -> list[int]:
-    fs, log_p, _ = _fs_path(spark, _log_path(table_path))
-    if not fs.exists(log_p):
-        return []
-    out = []
-    for st in fs.listStatus(log_p):
-        name = st.getPath().getName()
-        if name.startswith("v") and name.endswith(".json"):
-            out.append(int(name[1:-5]))
-    return sorted(out)
+def read_manifest(spark: SparkSession, table_path: str, version: int) -> dict:
+    """Version ``version``'s manifest as published (full or delta)."""
+    return _log(spark, table_path).read(version)
 
 
-def _read_manifest(spark: SparkSession, table_path: str, version: int) -> dict:
-    uri = _manifest_uri(table_path, version)
-    fs, p, _ = _fs_path(spark, uri)
-    if not fs.exists(p):
-        known = _list_versions(spark, table_path)
-        raise ValueError(
-            f"version {version} does not exist at {table_path} "
-            f"(available: {known or 'none'}; it may have been vacuumed)"
-        )
-    return json.loads(_read_text(spark, uri))
+def resolve_manifest(spark: SparkSession, table_path: str, version: int) -> dict:
+    """Version ``version``'s manifest with its file list materialized
+    (see :meth:`tablelog.TableLog.resolve`)."""
+    return _log(spark, table_path).resolve(version)
 
 
 # Incremental (delta) manifests — the 100 TB metadata shape. A full
@@ -214,38 +198,6 @@ def _now_ms() -> int:
 # materializes (applies and clears) all entries. At 100 TB this is the
 # difference between a 10-row delete costing O(10) and costing a
 # multi-GB file rewrite.
-# anchored to the file's IMMEDIATE PARENT directory: a '/commit-7-backup/'
-# segment inside the user's table_path must never poison the parse
-# (code-review r9 — re.search took the FIRST match, so such a path made
-# every file's birth look like 7 and silently skipped delete entries,
-# resurrecting deleted rows)
-_BIRTH_RE = re.compile(r"/commit-(\d+)-[^/]*/[^/]+$")
-
-
-def _birth_version(file_uri: str) -> int:
-    """The version whose commit wrote this data file (embedded in the
-    commit-dir path segment — the file's immediate parent). Files of
-    unknown provenance return 0 — masked by EVERY delete entry, the
-    conservative direction (a delete can only ever remove too much of an
-    unknown file, never resurrect)."""
-    m = _BIRTH_RE.search(file_uri)
-    return int(m.group(1)) if m else 0
-
-
-def _file_birth(births: dict | None, file_uri: str) -> int:
-    """Birth version of a data file: the manifest's explicit ``births``
-    map when recorded (VERDICT r9 stretch — survives any future file
-    relocation, because whoever rewrites the file list also carries the
-    map), else the commit-dir path parse for files written before the
-    map existed. Unknown either way degrades to 0 — masked by every
-    entry, the conservative direction."""
-    if births:
-        b = births.get(file_uri)
-        if b is not None:
-            return int(b)
-    return _birth_version(file_uri)
-
-
 # ---------------------------------------------------------------------------
 # Column mapping (VERDICT r10 item 4 — Delta's columnMapping shape):
 # RENAME/DROP COLUMN without rewriting a byte of data. Each logical field
@@ -340,7 +292,7 @@ def _apply_deletes(
     for f in files:
         # applicable entries: version > birth → the suffix starting at
         # bisect_right(versions, birth)
-        idx = bisect.bisect_right(versions, _file_birth(births, f))
+        idx = bisect.bisect_right(versions, tablelog.file_birth(births, f))
         groups.setdefault(idx, []).append(f)
     # one keys relation per ENTRY, shared across birth groups (code-review
     # r9: building it inside the group loop planned G×E redundant
@@ -399,7 +351,7 @@ def _verify_commit_visible(
     it, so the rows silently never become part of latest. The
     no-concurrent-maintenance contract forbids the scenario, but the
     failure mode must be a loud :class:`ConcurrentWriteError`, not silent
-    data loss. One ``_list_versions`` in the common case (latest == ours)."""
+    data loss. One ``list_versions`` in the common case (latest == ours)."""
     next_v = manifest["version"]
     lv = latest_version(spark, table_path)
     if lv is None or lv <= next_v:
@@ -410,7 +362,7 @@ def _verify_commit_visible(
     # our manifest in the publish→check window — we are live) or on a
     # DIFFERENT, since-expired occupant of our slot (we are an orphan).
     try:
-        succ = _read_manifest(spark, table_path, next_v + 1)
+        succ = read_manifest(spark, table_path, next_v + 1)
     except ValueError:
         succ = None
     if succ is not None and (
@@ -429,16 +381,14 @@ def _verify_commit_visible(
     # different, since-expired occupant, proven by its lineage field) or
     # has no manifest at all (a chained successor would have created
     # it) — so no reader can lose it
-    fs, man_p, _ = _fs_path(spark, _manifest_uri(table_path, next_v))
-    fs.delete(man_p, False)
+    storage.delete(spark, tablelog.manifest_uri(table_path, next_v))
     dirs = (
         [] if commit_dir is None
         else [commit_dir] if isinstance(commit_dir, str)
         else list(commit_dir)
     )
     for d in dirs:
-        fs_c, commit_p, _ = _fs_path(spark, d)
-        fs_c.delete(commit_p, True)
+        storage.delete(spark, d, True)
     raise ConcurrentWriteError(
         f"version {next_v} at {table_path} was published into a slot a "
         f"vacuum had already expired (latest is {lv}); the commit never "
@@ -446,79 +396,10 @@ def _verify_commit_visible(
     )
 
 
-def _ckpt_uri(table_path: str, version: int) -> str:
-    return f"{_log_path(table_path)}/c{version:0{_VERSION_WIDTH}d}.json"
-
-
-def _resolve_manifest(spark: SparkSession, table_path: str, version: int) -> dict:
-    """The manifest with ``files`` (and ``stats``) MATERIALIZED: full
-    manifests return as-is; delta manifests fold their adds/removes onto
-    the resolved base (preferring a vacuum-written checkpoint so expired
-    bases are never needed). Chain length is bounded by
-    _CHECKPOINT_EVERY, so resolution is a handful of small JSON reads —
-    never data IO."""
-    man = _read_manifest(spark, table_path, version)
-    if "delta_of" not in man:
-        return man
-    ckpt = _ckpt_uri(table_path, version)
-    fs, ckpt_p, _ = _fs_path(spark, ckpt)
-    if fs.exists(ckpt_p):
-        return json.loads(_read_text(spark, ckpt))
-    base = _resolve_manifest(spark, table_path, man["delta_of"])
-    removes = set(man.get("removes", []))
-    files = [f for f in base["files"] if f not in removes] + list(man["adds"])
-    out = {
-        k: v
-        for k, v in man.items()
-        if k not in ("delta_of", "adds", "removes", "stats_adds", "deletes_adds")
-    }
-    out["files"] = files
-    # birth-version map folds like the file list: carried files keep the
-    # base's record, a delta's adds are born at ITS version (implied —
-    # delta manifests carry no births key)
-    births = {
-        f: b for f, b in base.get("births", {}).items() if f not in removes
-    }
-    births.update({f: man["version"] for f in man["adds"]})
-    if births:
-        out["births"] = births
-    # equality-delete entries accumulate down the chain (a data append
-    # must never resurrect merge-on-read-deleted rows)
-    deletes = list(base.get("deletes", [])) + list(man.get("deletes_adds", []))
-    if deletes:
-        out["deletes"] = deletes
-    if man.get("stats_cols"):
-        base_stats = base.get("stats", {})
-        adds_stats = man.get("stats_adds", {})
-        out["stats"] = {
-            **{f: base_stats[f] for f in files if f in base_stats},
-            **adds_stats,
-        }
-    return out
-
-
 def _publish(spark: SparkSession, table_path: str, manifest: dict) -> None:
-    """Atomically create ``_log/v{N}.json`` — the commit point.
-
-    Write to a unique temp name first (a crash mid-write must never leave
-    a half manifest under the live name), then claim the live name with a
-    create-no-overwrite primitive. The primitive is per-filesystem,
-    because "rename fails when the destination exists" is NOT a portable
-    contract:
-
-    * ``file://`` — POSIX rename OVERWRITES, so two writers racing inside
-      an exists/rename window could both believe they committed (the
-      round-5 hazard). ``java.nio.Files.createLink`` is a hard link —
-      O_EXCL-atomic at the kernel, publishes the FULL temp content in one
-      metadata operation, and throws ``FileAlreadyExistsException`` for
-      the loser. No check-then-act window at all.
-    * ``hdfs://`` (and any FS with HDFS rename semantics) — rename is
-      atomic and returns False when the destination exists; that return
-      value IS the claim.
-    * object stores without atomic no-overwrite (raw S3A) — neither
-      primitive is safe; like Delta, this format needs an external
-      coordination service there. Stated, not papered over.
-    """
+    """Atomically create ``_log/v{N}.json`` — the commit point — with
+    :func:`storage.publish`'s create-no-overwrite claim; the loser of a
+    race for the version number raises :class:`ConcurrentWriteError`."""
     # commit wall-clock timestamp (VERDICT r9 item 3 — enables TIMESTAMP
     # AS OF): O(1) metadata recorded at the publish point itself, so every
     # commit path gets it for free. Wall clocks are NOT monotonic across
@@ -527,38 +408,13 @@ def _publish(spark: SparkSession, table_path: str, manifest: dict) -> None:
     # contradict version order.
     manifest.setdefault("committed_at_ms", _now_ms())
     version = manifest["version"]
-    final = _manifest_uri(table_path, version)
-    tmp = f"{_log_path(table_path)}/.tmp-{version}-{uuid.uuid4().hex}"
-    fs, final_p, jvm = _fs_path(spark, final)
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(_log_path(table_path)))
-    _write_text(spark, tmp, json.dumps(manifest, sort_keys=True))
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    lost = False
-    try:
-        if (final_p.toUri().getScheme() or fs.getUri().getScheme()) == "file":
-            try:
-                # java.io.File(...).toPath() sidesteps Paths.get's varargs
-                # signature, which py4j cannot bind
-                jvm.java.nio.file.Files.createLink(
-                    jvm.java.io.File(final_p.toUri().getPath()).toPath(),
-                    jvm.java.io.File(
-                        fs.makeQualified(tmp_p).toUri().getPath()
-                    ).toPath(),
-                )
-            except Exception as e:  # py4j surfaces the Java class in str()
-                if "FileAlreadyExistsException" not in str(e):
-                    raise
-                lost = True
-        else:
-            lost = fs.exists(final_p) or not fs.rename(tmp_p, final_p)
-    finally:
-        # the temp is consumed on EVERY exit: hard-linked (file:// win),
-        # renamed away (hdfs win — delete is then a no-op), lost, or an
-        # unexpected claim failure re-raising (code-review r8: this used
-        # to leak the temp on that last path, and nothing else sweeps
-        # _log/.tmp-*, so failed publishes accumulated garbage forever)
-        fs.delete(tmp_p, False)
-    if lost:
+    tmp = f"{tablelog.log_dir(table_path)}/.tmp-{version}-{uuid.uuid4().hex}"
+    if not storage.publish(
+        spark,
+        tmp,
+        tablelog.manifest_uri(table_path, version),
+        json.dumps(manifest, sort_keys=True),
+    ):
         raise ConcurrentWriteError(
             f"version {version} at {table_path} was published by another "
             "writer — re-read the latest version and retry"
@@ -705,7 +561,7 @@ def plan_scan(
             version = latest_version(spark, table_path)
             if version is None:
                 raise ValueError(f"no versions published at {table_path}")
-        man = _resolve_manifest(spark, table_path, version)
+        man = resolve_manifest(spark, table_path, version)
     stats = man.get("stats", {})
     stats_cols = man.get("stats_cols", [])
     col_types = _schema_col_types(man["schema"])
@@ -778,7 +634,7 @@ def scan_table(
         version = latest_version(spark, table_path)
         if version is None:
             raise ValueError(f"no versions published at {table_path}")
-    man = _resolve_manifest(spark, table_path, version)
+    man = resolve_manifest(spark, table_path, version)
     schema = StructType.fromJson(json.loads(man["schema"]))
     kept, _total = plan_scan(
         spark,
@@ -814,11 +670,11 @@ def _commit_files(spark: SparkSession, commit_dir: str) -> list[str]:
     manifest without the just-written files — silent data loss reported
     as success (e.g. optimize_table publishing an empty table as latest).
     """
-    return sorted(_list_parquet_files(spark, commit_dir))
+    return sorted(storage.list_parquet_files(spark, commit_dir))
 
 
 def latest_version(spark: SparkSession, table_path: str) -> int | None:
-    vs = _list_versions(spark, table_path)
+    vs = list_versions(spark, table_path)
     return vs[-1] if vs else None
 
 
@@ -864,13 +720,13 @@ def version_as_of_timestamp(spark: SparkSession, table_path: str, ts) -> int:
     version that WAS current then may be vacuumed — answering with a
     later version would silently time-travel forward)."""
     t = _ts_to_ms(ts)
-    versions = _list_versions(spark, table_path)
+    versions = list_versions(spark, table_path)
     if not versions:
         raise ValueError(f"no versions published at {table_path}")
     best: int | None = None
     eff = 0
     for v in versions:
-        man = _read_manifest(spark, table_path, v)
+        man = read_manifest(spark, table_path, v)
         eff = max(eff, int(man.get("committed_at_ms", 0)))
         if eff <= t:
             best = v
@@ -992,7 +848,7 @@ def versioned_write(
     prev_files: list[str] = []
     prev_stats: dict = {}
     schema_json = df.schema.json()
-    prev = _resolve_manifest(spark, table_path, base) if base is not None else None
+    prev = resolve_manifest(spark, table_path, base) if base is not None else None
     inherited_stats = False
     if prev is not None and stats_cols is None:
         stats_cols = prev.get("stats_cols")
@@ -1100,7 +956,7 @@ def versioned_write(
             _validate_stats_cols(df.schema, added)
             stats_cols = list(stats_cols) + added
     next_v = (base or 0) + 1
-    commit_dir = f"{table_path.rstrip('/')}/commit-{next_v:0{_VERSION_WIDTH}d}-{uuid.uuid4().hex[:8]}"
+    commit_dir = tablelog.new_commit_dir(table_path, next_v)
     out = df
     if cluster_by:
         from pyspark.sql import functions as F
@@ -1131,7 +987,7 @@ def versioned_write(
             births=(
                 {
                     **{
-                        f: _file_birth(prev.get("births"), f)
+                        f: tablelog.file_birth(prev.get("births"), f)
                         for f in prev_files
                     },
                     **{f: next_v for f in new_files},
@@ -1141,8 +997,7 @@ def versioned_write(
             ),
         )
     except ValueError:
-        fs, commit_p, _ = _fs_path(spark, commit_dir)
-        fs.delete(commit_p, True)  # orphan data, no reader ever saw it
+        storage.delete(spark, commit_dir, True)  # orphan data, no reader ever saw it
         raise
     same_cols = prev is not None and prev.get("stats_cols") == (
         list(stats_cols) if stats_cols else None
@@ -1180,7 +1035,7 @@ def versioned_write(
         # commit-dir path convention.
         manifest["births"] = {
             **{
-                f: _file_birth(prev.get("births") if prev else None, f)
+                f: tablelog.file_birth(prev.get("births") if prev else None, f)
                 for f in prev_files
             },
             **{f: next_v for f in new_files},
@@ -1237,8 +1092,7 @@ def versioned_write(
     try:
         _publish(spark, table_path, manifest)
     except ConcurrentWriteError:
-        fs, commit_p, _ = _fs_path(spark, commit_dir)
-        fs.delete(commit_p, True)  # orphan data, no reader ever saw it
+        storage.delete(spark, commit_dir, True)  # orphan data, no reader ever saw it
         raise
     _verify_commit_visible(spark, table_path, manifest, commit_dir)
     return manifest
@@ -1329,7 +1183,7 @@ def optimize_table(
     base = latest_version(spark, table_path)
     if base is None:
         raise ValueError(f"no versions published at {table_path}")
-    man = _resolve_manifest(spark, table_path, base)
+    man = resolve_manifest(spark, table_path, base)
     schema_json = man["schema"]
     deletes = man.get("deletes", [])
     births = man.get("births")
@@ -1340,19 +1194,13 @@ def optimize_table(
         if max_entry is None:
             return man  # no debt — nothing to do, no version published
         rewrite = [
-            f for f in man["files"] if _file_birth(births, f) < max_entry
+            f for f in man["files"] if tablelog.file_birth(births, f) < max_entry
         ]
         carry = [
-            f for f in man["files"] if _file_birth(births, f) >= max_entry
+            f for f in man["files"] if tablelog.file_birth(births, f) >= max_entry
         ]
     else:  # small
-        conf = spark._jsc.hadoopConfiguration()
-        _, _, jvm = _fs_path(spark, table_path)
-        hpath = jvm.org.apache.hadoop.fs.Path
-        sizes = {}
-        for f in man["files"]:
-            p = hpath(f)
-            sizes[f] = p.getFileSystem(conf).getFileStatus(p).getLen()
+        sizes = {f: storage.file_size(spark, f) for f in man["files"]}
         rewrite = [f for f in man["files"] if sizes[f] < small_file_bytes]
         carry = [f for f in man["files"] if sizes[f] >= small_file_bytes]
         if len(rewrite) < 2:
@@ -1367,15 +1215,12 @@ def optimize_table(
     # fresh birth version escapes them — but a carried file born before
     # an entry still needs it
     keep_deletes = deletes and any(
-        _file_birth(births, f) < max_entry for f in carry
+        tablelog.file_birth(births, f) < max_entry for f in carry
     )
     schema = StructType.fromJson(json.loads(schema_json))
     df = _apply_deletes(spark, schema, rewrite, deletes, births=births)
     next_v = base + 1
-    commit_dir = (
-        f"{table_path.rstrip('/')}/commit-{next_v:0{_VERSION_WIDTH}d}"
-        f"-{uuid.uuid4().hex[:8]}"
-    )
+    commit_dir = tablelog.new_commit_dir(table_path, next_v)
     if zorder_cols:
         from procurement_data_pipeline_spark.catalog import z_order_write
 
@@ -1403,7 +1248,7 @@ def optimize_table(
         "files": carry + new_files,
         "n_files": len(carry) + len(new_files),
         "births": {
-            **{f: _file_birth(births, f) for f in carry},
+            **{f: tablelog.file_birth(births, f) for f in carry},
             **{f: next_v for f in new_files},
         },
         "schema": schema_json,
@@ -1458,12 +1303,12 @@ def optimize_table(
                 # walk the interleaved commits; every one must be a pure
                 # append (delta adds, or a full manifest that only grew)
                 base_files = set(
-                    _resolve_manifest(spark, table_path, target_v - 1)[
+                    resolve_manifest(spark, table_path, target_v - 1)[
                         "files"
                     ]
                 )
                 for v in range(target_v, head + 1):
-                    raw = _read_manifest(spark, table_path, v)
+                    raw = read_manifest(spark, table_path, v)
                     if raw.get("op") != "append" or raw.get("deletes_adds"):
                         ok = False
                         break
@@ -1484,22 +1329,21 @@ def optimize_table(
                         extra_adds.extend(adds)
                         base_files = cur
             if not ok:
-                fs, commit_p, _ = _fs_path(spark, commit_dir)
-                fs.delete(commit_p, True)
+                storage.delete(spark, commit_dir, True)
                 raise
             rebase_adds.extend(extra_adds)
-            head_raw = _read_manifest(spark, table_path, head)
-            head_man = _resolve_manifest(spark, table_path, head)
+            head_raw = read_manifest(spark, table_path, head)
+            head_man = resolve_manifest(spark, table_path, head)
             new_v2 = head + 1
             manifest["version"] = new_v2
             manifest["base_version"] = head
             manifest["files"] = carry + new_files + rebase_adds
             manifest["n_files"] = len(manifest["files"])
             manifest["births"] = {
-                **{f: _file_birth(births, f) for f in carry},
+                **{f: tablelog.file_birth(births, f) for f in carry},
                 **{f: new_v2 for f in new_files},
                 **{
-                    f: _file_birth(head_man.get("births"), f)
+                    f: tablelog.file_birth(head_man.get("births"), f)
                     for f in rebase_adds
                 },
             }
@@ -1535,8 +1379,7 @@ def optimize_table(
                 manifest.pop("stats_cols", None)
                 manifest.pop("stats", None)
     if not published:
-        fs, commit_p, _ = _fs_path(spark, commit_dir)
-        fs.delete(commit_p, True)
+        storage.delete(spark, commit_dir, True)
         raise ConcurrentWriteError(
             f"optimize at {table_path} lost the publish 8 times in a row "
             "— writer volume too high for a maintenance rebase; retry in "
@@ -1565,7 +1408,7 @@ def read_table(
         version = latest_version(spark, table_path)
         if version is None:
             raise ValueError(f"no versions published at {table_path}")
-    man = _resolve_manifest(spark, table_path, version)
+    man = resolve_manifest(spark, table_path, version)
     schema = StructType.fromJson(json.loads(man["schema"]))
     # the manifest schema PINS the read: after widening evolution, files
     # written before a column existed read it back as NULL (and every
@@ -1594,10 +1437,7 @@ def _merge_on_read(
     rewrites. The delete dir shares the ``commit-`` prefix so a losing
     writer's orphans are swept by the same vacuum walk as data commits."""
     next_v = base + 1
-    stem = (
-        f"{table_path.rstrip('/')}/commit-{next_v:0{_VERSION_WIDTH}d}"
-        f"-{uuid.uuid4().hex[:8]}"
-    )
+    stem = tablelog.new_commit_dir(table_path, next_v)
     del_dir, commit_dir = stem + "-del", stem
     # key files and upsert files store PHYSICAL names; the delete entry
     # records the physical key names (descriptive of its files — the read
@@ -1621,8 +1461,7 @@ def _merge_on_read(
             )
         except ValueError:
             for d in (del_dir, commit_dir):
-                fs, p, _ = _fs_path(spark, d)
-                fs.delete(p, True)
+                storage.delete(spark, d, True)
             raise
     entry = {
         "version": next_v,
@@ -1668,7 +1507,7 @@ def _merge_on_read(
     else:
         manifest["files"] = man["files"] + new_files
         manifest["births"] = {
-            **{f: _file_birth(man.get("births"), f) for f in man["files"]},
+            **{f: tablelog.file_birth(man.get("births"), f) for f in man["files"]},
             **{f: next_v for f in new_files},
         }
         manifest["deletes"] = list(man.get("deletes", [])) + [entry]
@@ -1692,8 +1531,7 @@ def _merge_on_read(
         _publish(spark, table_path, manifest)
     except ConcurrentWriteError:
         for d in (del_dir, commit_dir):
-            fs, p, _ = _fs_path(spark, d)
-            fs.delete(p, True)
+            storage.delete(spark, d, True)
         raise
     _verify_commit_visible(spark, table_path, manifest, [del_dir, commit_dir])
     return manifest
@@ -1943,7 +1781,7 @@ def merge_into(
     base = latest_version(spark, table_path)
     if base is None:
         raise ValueError(f"no versions published at {table_path}")
-    man = _resolve_manifest(spark, table_path, base)
+    man = resolve_manifest(spark, table_path, base)
     if when_matched == "update":
         table_fields = {
             f["name"]: f["type"] for f in json.loads(man["schema"])["fields"]
@@ -2065,10 +1903,7 @@ def merge_into(
     touched_set = set(touched)  # hoisted: O(files+touched), not O(files·touched)
     untouched = [f for f in man["files"] if f not in touched_set]
     next_v = base + 1
-    commit_dir = (
-        f"{table_path.rstrip('/')}/commit-{next_v:0{_VERSION_WIDTH}d}"
-        f"-{uuid.uuid4().hex[:8]}"
-    )
+    commit_dir = tablelog.new_commit_dir(table_path, next_v)
     # conditional and/or partial-column updates share the join form: the
     # renamed update side left-joins the target, SET expressions (or the
     # whole update row) apply where matched-and-condition holds, and
@@ -2216,8 +2051,7 @@ def merge_into(
                 spark, man["schema"], new_files, man.get("constraints")
             )
         except ValueError:
-            fs, commit_p, _ = _fs_path(spark, commit_dir)
-            fs.delete(commit_p, True)
+            storage.delete(spark, commit_dir, True)
             raise
     # delta manifest on big tables: log only the rewritten files as
     # removes + the rewrite output as adds — a MERGE touching k files
@@ -2256,7 +2090,7 @@ def merge_into(
     else:
         manifest["files"] = untouched + new_files
         manifest["births"] = {
-            **{f: _file_birth(man.get("births"), f) for f in untouched},
+            **{f: tablelog.file_birth(man.get("births"), f) for f in untouched},
             **{f: next_v for f in new_files},
         }
         # live delete entries still mask the UNTOUCHED files' rows; the
@@ -2282,8 +2116,7 @@ def merge_into(
     try:
         _publish(spark, table_path, manifest)
     except ConcurrentWriteError:
-        fs, commit_p, _ = _fs_path(spark, commit_dir)
-        fs.delete(commit_p, True)
+        storage.delete(spark, commit_dir, True)
         raise
     _verify_commit_visible(spark, table_path, manifest, commit_dir)
     return manifest
@@ -2306,7 +2139,7 @@ def rollback(
         to_version = version_as_of_timestamp(spark, table_path, timestamp)
     if to_version is None:
         raise ValueError("rollback needs to_version or timestamp")
-    target = _resolve_manifest(spark, table_path, to_version)
+    target = resolve_manifest(spark, table_path, to_version)
     base = latest_version(spark, table_path)
     manifest = {
         "version": base + 1,
@@ -2317,13 +2150,13 @@ def rollback(
         # identical files → identical birth versions (path parse
         # backfills targets that predate the explicit map)
         "births": {
-            f: _file_birth(target.get("births"), f) for f in target["files"]
+            f: tablelog.file_birth(target.get("births"), f) for f in target["files"]
         },
         "schema": target["schema"],
         # lineage parent is the LATEST observed (the commit-chain parent),
         # not to_version — base_version records the rollback target for
         # the audit view, base_commit_id records what this commit sits on
-        **_lineage(_read_manifest(spark, table_path, base)),
+        **_lineage(read_manifest(spark, table_path, base)),
     }
     if target.get("stats_cols"):  # identical files → identical stats
         manifest["stats_cols"] = target["stats_cols"]
@@ -2367,7 +2200,7 @@ def rename_column(
     base = latest_version(spark, table_path)
     if base is None:
         raise ValueError(f"no versions published at {table_path}")
-    man = _resolve_manifest(spark, table_path, base)
+    man = resolve_manifest(spark, table_path, base)
     schema = json.loads(man["schema"])
     names = [f["name"] for f in schema["fields"]]
     if old not in names:
@@ -2394,7 +2227,7 @@ def rename_column(
         "files": man["files"],
         "n_files": len(man["files"]),
         "births": {
-            f: _file_birth(man.get("births"), f) for f in man["files"]
+            f: tablelog.file_birth(man.get("births"), f) for f in man["files"]
         },
         "schema": json.dumps(schema),
         **_lineage(man),
@@ -2433,7 +2266,7 @@ def drop_column(spark: SparkSession, table_path: str, name: str) -> dict:
     base = latest_version(spark, table_path)
     if base is None:
         raise ValueError(f"no versions published at {table_path}")
-    man = _resolve_manifest(spark, table_path, base)
+    man = resolve_manifest(spark, table_path, base)
     schema = json.loads(man["schema"])
     fields = schema["fields"]
     names = [f["name"] for f in fields]
@@ -2465,7 +2298,7 @@ def drop_column(spark: SparkSession, table_path: str, name: str) -> dict:
         "files": man["files"],
         "n_files": len(man["files"]),
         "births": {
-            f: _file_birth(man.get("births"), f) for f in man["files"]
+            f: tablelog.file_birth(man.get("births"), f) for f in man["files"]
         },
         "schema": json.dumps(schema),
         "dropped_cols": sorted(
@@ -2555,7 +2388,7 @@ def clone_table(
         version = latest_version(spark, src_path)
         if version is None:
             raise ValueError(f"no versions published at {src_path}")
-    man = _resolve_manifest(spark, src_path, version)
+    man = resolve_manifest(spark, src_path, version)
     manifest: dict = {
         # shallow clones publish at the SOURCE version so carried
         # births/delete-entry versions stay in-domain (see docstring);
@@ -2574,7 +2407,7 @@ def clone_table(
     if not deep:
         manifest["files"] = list(man["files"])
         manifest["births"] = {
-            f: _file_birth(man.get("births"), f) for f in man["files"]
+            f: tablelog.file_birth(man.get("births"), f) for f in man["files"]
         }
         # delete entries keep their own versions: scoping at dst replays
         # exactly the source's (births carried unchanged)
@@ -2595,10 +2428,7 @@ def clone_table(
             if md.pop("physical", None) is not None:
                 fld["metadata"] = md
         manifest["schema"] = json.dumps(stripped)
-        commit_dir = (
-            f"{dst_path.rstrip('/')}/commit-{1:0{_VERSION_WIDTH}d}"
-            f"-{uuid.uuid4().hex[:8]}"
-        )
+        commit_dir = tablelog.new_commit_dir(dst_path, 1)
         schema = StructType.fromJson(json.loads(man["schema"]))
         df = _apply_deletes(
             spark, schema, man["files"], deletes, births=man.get("births")
@@ -2621,8 +2451,7 @@ def clone_table(
         _publish(spark, dst_path, manifest)
     except ConcurrentWriteError:
         if deep:
-            fs, commit_p, _ = _fs_path(spark, commit_dir)
-            fs.delete(commit_p, True)
+            storage.delete(spark, commit_dir, True)
         raise
     return manifest
 
@@ -2652,7 +2481,7 @@ def describe_deletes(
         version = latest_version(spark, table_path)
         if version is None:
             raise ValueError(f"no versions published at {table_path}")
-    man = _resolve_manifest(spark, table_path, version)
+    man = resolve_manifest(spark, table_path, version)
     deletes = man.get("deletes", [])
     max_entry = max((d["version"] for d in deletes), default=None)
     births = man.get("births")
@@ -2660,7 +2489,7 @@ def describe_deletes(
         0
         if max_entry is None
         else sum(
-            1 for f in man["files"] if _file_birth(births, f) < max_entry
+            1 for f in man["files"] if tablelog.file_birth(births, f) < max_entry
         )
     )
     return {
@@ -2700,12 +2529,12 @@ def consolidate_deletes(spark: SparkSession, table_path: str) -> dict:
     base = latest_version(spark, table_path)
     if base is None:
         raise ValueError(f"no versions published at {table_path}")
-    man = _resolve_manifest(spark, table_path, base)
+    man = resolve_manifest(spark, table_path, base)
     entries = sorted(man.get("deletes", []), key=lambda d: d["version"])
     if len(entries) < 2:
         return man
     birth_list = sorted(
-        _file_birth(man.get("births"), f) for f in man["files"]
+        tablelog.file_birth(man.get("births"), f) for f in man["files"]
     )
     import bisect as _b
 
@@ -2740,7 +2569,7 @@ def consolidate_deletes(spark: SparkSession, table_path: str) -> dict:
         "files": man["files"],
         "n_files": len(man["files"]),
         "births": {
-            f: _file_birth(man.get("births"), f) for f in man["files"]
+            f: tablelog.file_birth(man.get("births"), f) for f in man["files"]
         },
         "schema": man["schema"],
         "deletes": merged,
@@ -2762,8 +2591,8 @@ def history(spark: SparkSession, table_path: str) -> list[dict]:
     ``committed_at_ms`` (None on pre-upgrade manifests) is how a user
     discovers the instants ``TIMESTAMP AS OF`` can resolve."""
     out = []
-    for v in _list_versions(spark, table_path):
-        man = _read_manifest(spark, table_path, v)
+    for v in list_versions(spark, table_path):
+        man = read_manifest(spark, table_path, v)
         out.append(
             {
                 "version": man["version"],
@@ -2813,7 +2642,7 @@ def vacuum(
     """
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    versions = _list_versions(spark, table_path)
+    versions = list_versions(spark, table_path)
     keep_n = keep_last
     if retain_hours is not None:
         if retain_hours < 0:
@@ -2825,7 +2654,7 @@ def vacuum(
             eff = max(
                 eff,
                 int(
-                    _read_manifest(spark, table_path, v).get(
+                    read_manifest(spark, table_path, v).get(
                         "committed_at_ms", 0
                     )
                 ),
@@ -2841,56 +2670,51 @@ def vacuum(
     dropset = set(drop)
     live: set[str] = set()
     for v in keep:
-        resolved = _resolve_manifest(spark, table_path, v)
+        resolved = resolve_manifest(spark, table_path, v)
         live.update(resolved["files"])
         # merge-on-read delete files are as load-bearing as data files:
         # sweeping one would resurrect its masked rows in every retained
         # version that carries the entry
         for d in resolved.get("deletes", []):
             live.update(d["files"])
-    fs, root_p, jvm = _fs_path(spark, table_path)
-    hpath = jvm.org.apache.hadoop.fs.Path
     # a retained DELTA manifest whose base is being expired must first be
     # materialized as a c{N}.json checkpoint (resolution prefers it), or
     # expiring the base would orphan the chain. Any retained delta whose
     # base is itself retained resolves through that base's own checkpoint,
     # so the direct-base rule covers transitive chains. Checkpoint writes
-    # are tmp+rename and idempotent — a crash mid-vacuum just reruns.
+    # are publish-claimed and idempotent — a crash mid-vacuum just reruns.
     for v in keep:
-        raw = _read_manifest(spark, table_path, v)
+        raw = read_manifest(spark, table_path, v)
         if raw.get("delta_of") in dropset and not dry_run:
-            ckpt = _ckpt_uri(table_path, v)
-            ckpt_p = hpath(ckpt)
-            if not fs.exists(ckpt_p):
-                resolved = _resolve_manifest(spark, table_path, v)
-                tmp = f"{_log_path(table_path)}/.ctmp-{v}-{uuid.uuid4().hex}"
-                _write_text(spark, tmp, json.dumps(resolved, sort_keys=True))
-                if not fs.rename(hpath(tmp), ckpt_p):
-                    fs.delete(hpath(tmp), False)
-                    if not fs.exists(ckpt_p):
-                        raise IOError(f"could not write checkpoint {ckpt}")
+            ckpt = tablelog.checkpoint_uri(table_path, v)
+            if not storage.exists(spark, ckpt):
+                resolved = resolve_manifest(spark, table_path, v)
+                tmp = f"{tablelog.log_dir(table_path)}/.ctmp-{v}-{uuid.uuid4().hex}"
+                text = json.dumps(resolved, sort_keys=True)
+                if not storage.publish(spark, tmp, ckpt, text) and not (
+                    storage.exists(spark, ckpt)
+                ):
+                    raise IOError(f"could not write checkpoint {ckpt}")
     deleted = 0
     # sweep data files commit-dir by commit-dir; drop dirs left empty
     # (orphan commits from losing writers have no manifest at all and are
     # swept by the same walk)
-    for st in fs.listStatus(root_p):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("commit-")):
+    for d in storage.list_dir(spark, table_path):
+        if not (d.is_dir and d.name.startswith("commit-")):
             continue
         all_gone = True
-        for fst in fs.listStatus(st.getPath()):
+        for f in storage.list_dir(spark, d.uri):
             # compare FULLY-QUALIFIED URIs: manifests store Path.toString()
             # (e.g. file:/…) — rebuilding from the user-form table_path
             # would never match and would sweep live data
-            f_uri = fst.getPath().toString()
-            if f_uri in live:
+            if f.uri in live:
                 all_gone = False
-            elif fst.getPath().getName().endswith(".parquet"):
+            elif f.name.endswith(".parquet"):
                 if not dry_run:
-                    fs.delete(fst.getPath(), False)
+                    storage.delete(spark, f.uri)
                 deleted += 1
         if all_gone and not dry_run:
-            fs.delete(st.getPath(), True)
+            storage.delete(spark, d.uri, True)
     if dry_run:
         return {
             "expired_versions": len(drop),
@@ -2898,30 +2722,29 @@ def vacuum(
             "dry_run": True,
         }
     for v in drop:
-        fs.delete(hpath(_manifest_uri(table_path, v)), False)
-        fs.delete(hpath(_ckpt_uri(table_path, v)), False)  # absent → no-op
+        storage.delete(spark, tablelog.manifest_uri(table_path, v))
+        storage.delete(spark, tablelog.checkpoint_uri(table_path, v))  # absent → no-op
     # sweep torn .ctmp-* checkpoint temps a CRASHED vacuum left behind.
-    # This run's own temps are already gone (renamed or deleted inline
+    # This run's own temps are already gone (published or deleted inline
     # above), so anything here is either hours-old wreckage or a
     # concurrent vacuum's in-flight temp — the grace period separates the
     # two (ADVICE r7: an unconditional sweep would break a concurrent
     # vacuum's checkpoint commit; a crashed run's temp is old by the time
     # the next maintenance window runs).
-    import time
-
     now_ms = time.time() * 1000.0
-    log_p = hpath(_log_path(table_path))
-    if fs.exists(log_p):
-        for st in fs.listStatus(log_p):
-            if st.getPath().getName().startswith(".ctmp-") and (
-                now_ms - st.getModificationTime() >= ctmp_grace_seconds * 1000.0
-            ):
-                fs.delete(st.getPath(), False)
+    for e in storage.list_dir(spark, tablelog.log_dir(table_path)):
+        if e.name.startswith(".ctmp-") and (
+            now_ms - e.mtime >= ctmp_grace_seconds * 1000.0
+        ):
+            storage.delete(spark, e.uri)
     return {"expired_versions": len(drop), "deleted_files": deleted}
 
 
 __all__ = [
     "ConcurrentWriteError",
+    "list_versions",
+    "read_manifest",
+    "resolve_manifest",
     "versioned_write",
     "write_with_retry",
     "optimize_table",

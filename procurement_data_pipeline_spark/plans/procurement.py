@@ -21,6 +21,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from procurement_data_pipeline_spark import storage
 from procurement_data_pipeline_spark.functions.dates import shift_date
 from procurement_data_pipeline_spark.catalog import (
     LOGS_EXCEPTIONS,
@@ -121,39 +122,19 @@ def build_daily_pipeline(
     def archive(ctx: dict[str, Any]):
         # procurement_dag.py:197-308 — archive exports/logs next to the
         # warehouse tables (filesystem copy; data movement, not query work).
-        # Copies go through Hadoop FileUtil so the archive works on whatever
-        # filesystem the warehouse lives on (file://, hdfs://, s3a://) —
-        # same reasoning as incremental_refresh / compact_dir / merge_upsert.
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        hpath = jvm.org.apache.hadoop.fs.Path
-
-        def _copy(src_str: str, dst_str: str) -> None:
-            src_p, dst_p = hpath(src_str), hpath(dst_str)
-            fs = src_p.getFileSystem(hconf)
-            dfs = dst_p.getFileSystem(hconf)
-            # Delete-then-copy: FileUtil.copy into an EXISTING dir nests
-            # src under it; removing dst first gives the rerun the same
-            # replace-in-place semantics the old copytree(dirs_exist_ok)
-            # had (and stronger: no stale files survive).
-            if dfs.exists(dst_p):
-                dfs.delete(dst_p, True)
-            jvm.org.apache.hadoop.fs.FileUtil.copy(
-                fs, src_p, dfs, dst_p, False, True, hconf
-            )
-
+        # copy_replace works on whatever filesystem the warehouse lives on
+        # and replaces a rerun's earlier copy in place.
         src = wh.path(OUTPUT_SUPPLIER_ORDERS, order_date)
         dst = wh.path(PROCESSED, "supplier_orders", order_date)
-        _copy(src, dst)
+        storage.copy_replace(spark, src, dst)
         # Exceptions-log parity (procurement_dag.py:293-306): the daily
         # exceptions JSON is archived under processed/logs_exceptions/<date>
         # exactly as the reference uploads it to /logs/exceptions/<date>.
-        log_src = wh.path(LOGS_EXCEPTIONS, f"exceptions_{exec_date}.json")
-        log_fs = hpath(log_src).getFileSystem(hconf)
-        if log_fs.exists(hpath(log_src)):
-            log_dst = wh.path(PROCESSED, "logs_exceptions", exec_date)
-            log_fs.mkdirs(hpath(log_dst))
-            _copy(log_src, log_dst + "/" + f"exceptions_{exec_date}.json")
+        log_name = f"exceptions_{exec_date}.json"
+        log_src = wh.path(LOGS_EXCEPTIONS, log_name)
+        if storage.exists(spark, log_src):
+            log_dst = wh.path(PROCESSED, "logs_exceptions", exec_date, log_name)
+            storage.copy_replace(spark, log_src, log_dst)
         return dst
 
     return pipe

@@ -40,15 +40,16 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from procurement_data_pipeline_spark import storage
+from procurement_data_pipeline_spark.operators import tablelog
 from procurement_data_pipeline_spark.operators.cdf import table_changes
 from procurement_data_pipeline_spark.operators.versioning import (
-    _ckpt_uri,
-    _read_manifest,
-    _resolve_manifest,
     describe_deletes,
     merge_into,
     optimize_table,
+    read_manifest,
     read_table,
+    resolve_manifest,
     scan_table,
     vacuum,
     versioned_write,
@@ -381,7 +382,7 @@ def _delta_fixture(spark: SparkSession, sf_dir: str) -> str:
     # the delta regime must actually be engaged before vacuum hides v1-v4:
     # v2/v3/v5/v6/v7 are deltas carrying stats_adds, v4 is the forced full
     for v, want_delta in ((2, True), (3, True), (4, False), (5, True)):
-        raw = _read_manifest(spark, path, v)
+        raw = read_manifest(spark, path, v)
         if ("delta_of" in raw) != want_delta:
             raise RuntimeError(
                 f"delta fixture malformed: v{v} delta={'delta_of' in raw}, "
@@ -391,14 +392,11 @@ def _delta_fixture(spark: SparkSession, sf_dir: str) -> str:
         if want_delta and not raw.get("stats_adds"):
             raise RuntimeError(f"delta fixture: v{v} carries no stats_adds")
     vacuum(spark, path, keep_last=3)
-    from procurement_data_pipeline_spark.operators.erasure import _fs_path
-
-    fs_probe, ckpt_p, _ = _fs_path(spark, _ckpt_uri(path, 5))
-    if not fs_probe.exists(ckpt_p):
+    if not storage.exists(spark, tablelog.checkpoint_uri(path, 5)):
         raise RuntimeError(
             "delta fixture: vacuum did not materialize the c5 checkpoint"
         )
-    raw7 = _read_manifest(spark, path, 7)
+    raw7 = read_manifest(spark, path, 7)
     if raw7.get("delta_of") != 6:
         raise RuntimeError("delta fixture: latest manifest is not a delta")
     _DELTA[key] = path
@@ -543,8 +541,8 @@ def versioned_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from procurement_data_pipeline_spark.operators.versioned_sql import sql
 
     path = _fixture(spark, sf_dir)
-    ts2 = int(_read_manifest(spark, path, 2)["committed_at_ms"])
-    ts3 = int(_read_manifest(spark, path, 3)["committed_at_ms"])
+    ts2 = int(read_manifest(spark, path, 2)["committed_at_ms"])
+    ts3 = int(read_manifest(spark, path, 3)["committed_at_ms"])
     ts = max(ts2, ts3 - 1)
     return sql(
         spark,
@@ -616,9 +614,9 @@ def _mor_fixture(spark: SparkSession, sf_dir: str) -> str:
     # delta threshold publishes the merges as delta manifests, where the
     # raw dict has deletes_adds and no 'files' key — the structural claims
     # are about the resolved file lists either way
-    m1 = _resolve_manifest(spark, path, 1)
-    m2 = _resolve_manifest(spark, path, 2)
-    m3 = _resolve_manifest(spark, path, 3)
+    m1 = resolve_manifest(spark, path, 1)
+    m2 = resolve_manifest(spark, path, 2)
+    m3 = resolve_manifest(spark, path, 3)
     if m2["files"] != m1["files"] or m2["merge"]["files_rewritten"] != 0:
         raise RuntimeError(
             "mor fixture malformed: the v2 delete rewrote data files — "

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from procurement_data_pipeline_spark import storage
 from procurement_data_pipeline_spark.llm_ops.kmv import (
     kmv_bottom_k,
     kmv_estimate,
@@ -54,10 +55,7 @@ def merge_kmv_state(
     from procurement_data_pipeline_spark.catalog import recover_swap, swap_dir
 
     recover_swap(spark, state_path)
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(state_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(root):
+    if storage.exists(spark, state_path):
         merged_input = spark.read.parquet(state_path).unionByName(batch_sketch)
     else:
         merged_input = batch_sketch
@@ -154,11 +152,8 @@ def merge_bloom_state(spark: SparkSession, state_path: str, batch_bf) -> None:
     from procurement_data_pipeline_spark.operators.bloomjoin import BloomFilter
 
     recover_swap(spark, state_path)
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(state_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
     merged = batch_bf
-    if fs.exists(root):
+    if storage.exists(spark, state_path):
         # read inline (recovery already ran above; load_bloom_state would
         # re-run the same existence checks on every trigger)
         row = spark.read.parquet(state_path).collect()[0]

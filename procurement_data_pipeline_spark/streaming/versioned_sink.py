@@ -58,18 +58,14 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from procurement_data_pipeline_spark import storage
 from procurement_data_pipeline_spark.operators.cdf_consumer import (
-    _advance_cursor,
-    _cursor_versions,
-)
-from procurement_data_pipeline_spark.operators.erasure import (
-    _read_text,
-    _write_text,
+    advance_cursor,
+    cursor_versions,
 )
 from procurement_data_pipeline_spark.operators.versioning import (
-    _fs_path,
-    _list_versions,
-    _read_manifest,
+    list_versions,
+    read_manifest,
     versioned_write,
 )
 
@@ -89,8 +85,7 @@ class StreamIdentityError(RuntimeError):
 def _qualify(spark: SparkSession, path: str) -> str:
     """Fully-qualified form of ``path`` — one spelling per physical
     location, so restarts with equivalent URIs keep the same identity."""
-    fs, p, _ = _fs_path(spark, path)
-    return fs.makeQualified(p).toString().rstrip("/")
+    return storage.qualify(spark, path).rstrip("/")
 
 
 def _state_root(table_path: str) -> str:
@@ -108,26 +103,22 @@ def _stream_states(
     """Every stream's durable ``(stream_id, last_batch)`` marker state.
     An empty cursor dir (crash before the first cursor rename) reports
     nothing — batch 0 must not be mistaken for already-committed."""
-    fs, root, _jvm = _fs_path(spark, _state_root(table_path))
-    if not fs.exists(root):
-        return []
     out: list[tuple[str | None, int]] = []
-    for st in fs.listStatus(root):
-        if not st.isDirectory():
+    for d in storage.list_dir(spark, _state_root(table_path)):
+        if not d.is_dir:
             continue
-        d = st.getPath().toString()
-        vs = _cursor_versions(spark, d)
+        vs = cursor_versions(spark, d.uri)
         if not vs:
             continue
-        id_file = d.rstrip("/") + "/id.json"
+        id_file = d.uri.rstrip("/") + "/id.json"
         sid = None
-        if fs.exists(_fs_path(spark, id_file)[1]):
+        if storage.exists(spark, id_file):
             # a torn id.json (crash mid-write under a non-atomic writer,
             # advice r9) must degrade to sid=None — the legacy-identity
             # path already handles it — not wedge every future commit
             # with a JSONDecodeError
             try:
-                sid = json.loads(_read_text(spark, id_file))["stream_id"]
+                sid = json.loads(storage.read_text(spark, id_file))["stream_id"]
             except (ValueError, KeyError):
                 sid = None
         # cursor content is name-determined: the max name IS the batch
@@ -146,8 +137,8 @@ def last_committed_batch(
     for sid, b in _stream_states(spark, table_path):
         if best is None or b > best[1]:
             best = (sid, b)
-    for v in reversed(_list_versions(spark, table_path)):
-        man = _read_manifest(spark, table_path, v)
+    for v in reversed(list_versions(spark, table_path)):
+        man = read_manifest(spark, table_path, v)
         if _STREAM_OP_KEY in man:
             if best is None or man[_STREAM_OP_KEY] > best[1]:
                 best = (man.get(_STREAM_ID_KEY), man[_STREAM_OP_KEY])
@@ -194,20 +185,18 @@ def stream_to_versioned_table(
         # raw stream id is recorded write-once beside the cursor so the
         # identity error can name the foreign checkpoint.
         sdir = _state_dir(table_path, stream_id)
-        id_file = sdir.rstrip("/") + "/id.json"
-        fs, id_p, jvm = _fs_path(spark, id_file)
-        _advance_cursor(spark, sdir, batch_id)
-        if not fs.exists(id_p):
-            # tmp + rename so a crash mid-write can never leave a torn
-            # id.json (advice r9); the reader also tolerates one, but a
-            # torn file would downgrade this stream to legacy identity
-            tmp_file = sdir.rstrip("/") + "/.id.json.tmp"
-            _write_text(spark, tmp_file, json.dumps({"stream_id": stream_id}))
-            hpath = jvm.org.apache.hadoop.fs.Path
-            if not fs.rename(hpath(tmp_file), id_p):
-                # lost to a concurrent commit of the SAME stream id
-                # (content is identity-determined) — success either way
-                fs.delete(hpath(tmp_file), False)
+        id_file = sdir + "/id.json"
+        advance_cursor(spark, sdir, batch_id)
+        if not storage.exists(spark, id_file):
+            # publish (tmp + claim) so a crash mid-write can never leave a
+            # torn id.json (advice r9); the reader also tolerates one, but
+            # a torn file would downgrade this stream to legacy identity.
+            # Losing the claim to a concurrent commit of the SAME stream
+            # id is success: the content is identity-determined.
+            storage.publish(
+                spark, sdir + "/.id.json.tmp", id_file,
+                json.dumps({"stream_id": stream_id}),
+            )
 
     return stream.writeStream.foreachBatch(_commit).option(
         "checkpointLocation", checkpoint_dir

@@ -56,9 +56,8 @@ is one ``InputPartition`` PER CHANGED FILE read with pyarrow on the
 executors — a 100 TB table with a 10-file commit costs 10 file reads,
 never a table scan and never a driver-side collect. The planner (offsets
 / partitions) runs in the data-source worker process without a
-SparkSession, so manifest IO here is pure-Python against the same JSON
-format ``operators/versioning.py`` publishes (the on-disk format is the
-contract; field semantics documented there).
+SparkSession, so it reads the log with local/pyarrow IO — through
+``operators/tablelog.py``, the same format module ``versioning`` uses.
 """
 
 from __future__ import annotations
@@ -75,14 +74,14 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructField, StructType
 
-_VERSION_WIDTH = 8  # mirrors operators/versioning.py
-
+from procurement_data_pipeline_spark.operators import tablelog
 
 # ---------------------------------------------------------------------------
-# Pure-Python manifest IO (no SparkSession: the reader object lives in the
-# data-source worker process and its partitions are pickled to executors).
-# Local paths and Hadoop-style file:/ URIs are handled natively; other
-# schemes go through pyarrow.fs (HDFS/S3 at deployment scale).
+# Log IO without a SparkSession (the reader object lives in the data-source
+# worker process and its partitions are pickled to executors). Local paths
+# and Hadoop-style file:/ URIs are handled natively; other schemes go
+# through pyarrow.fs (HDFS/S3 at deployment scale). The format itself is
+# tablelog's.
 # ---------------------------------------------------------------------------
 
 
@@ -123,87 +122,21 @@ def _exists(uri: str) -> bool:
     return fs.get_file_info(path).type.name != "NotFound"
 
 
-def _log_dir(table_path: str) -> str:
-    return _norm_path(table_path).rstrip("/") + "/_log"
-
-
-def list_versions(table_path: str) -> list[int]:
-    d = _log_dir(table_path)
+def _list_names(dir_uri: str) -> list[str]:
+    d = _norm_path(dir_uri)
     if _is_local(d):
-        if not os.path.isdir(d):
-            return []
-        names = os.listdir(d)
-    else:
-        import pyarrow.fs as pafs
+        return os.listdir(d) if os.path.isdir(d) else []
+    import pyarrow.fs as pafs
 
-        fs, path = pafs.FileSystem.from_uri(d)
-        sel = pafs.FileSelector(path, allow_not_found=True)
-        names = [os.path.basename(fi.path) for fi in fs.get_file_info(sel)]
-    out = []
-    for n in names:
-        if n.startswith("v") and n.endswith(".json"):
-            try:
-                out.append(int(n[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
+    fs, path = pafs.FileSystem.from_uri(d)
+    sel = pafs.FileSelector(path, allow_not_found=True)
+    return [os.path.basename(fi.path) for fi in fs.get_file_info(sel)]
 
 
-def read_manifest(table_path: str, version: int) -> dict:
-    uri = f"{_log_dir(table_path)}/v{version:0{_VERSION_WIDTH}d}.json"
-    if not _exists(uri):
-        raise ValueError(
-            f"version {version} does not exist at {table_path} "
-            "(it may have been vacuumed)"
-        )
-    return json.loads(_read_text(uri))
-
-
-def resolve_manifest(table_path: str, version: int) -> dict:
-    """Pure-Python twin of versioning._resolve_manifest: materialize a
-    delta chain onto its base (preferring a vacuum-written c{N}.json
-    checkpoint), folding files, births and delete entries identically."""
-    man = read_manifest(table_path, version)
-    if "delta_of" not in man:
-        return man
-    ckpt = f"{_log_dir(table_path)}/c{version:0{_VERSION_WIDTH}d}.json"
-    if _exists(ckpt):
-        return json.loads(_read_text(ckpt))
-    base = resolve_manifest(table_path, man["delta_of"])
-    removes = set(man.get("removes", []))
-    files = [f for f in base["files"] if f not in removes] + list(man["adds"])
-    out = {
-        k: v
-        for k, v in man.items()
-        if k not in ("delta_of", "adds", "removes", "stats_adds", "deletes_adds")
-    }
-    out["files"] = files
-    births = {
-        f: b for f, b in base.get("births", {}).items() if f not in removes
-    }
-    births.update({f: man["version"] for f in man["adds"]})
-    if births:
-        out["births"] = births
-    deletes = list(base.get("deletes", [])) + list(man.get("deletes_adds", []))
-    if deletes:
-        out["deletes"] = deletes
-    return out
-
-
-_BIRTH_SEG = "/commit-"
-
-
-def _file_birth(births: dict | None, file_uri: str) -> int:
-    """Mirror of versioning._file_birth: manifest births map first, then
-    the immediate-parent commit-dir parse, else 0 (conservative)."""
-    if births:
-        b = births.get(file_uri)
-        if b is not None:
-            return int(b)
-    import re
-
-    m = re.search(r"/commit-(\d+)-[^/]*/[^/]+$", file_uri)
-    return int(m.group(1)) if m else 0
+def _log(table_path: str) -> tablelog.TableLog:
+    return tablelog.TableLog(
+        table_path, exists=_exists, read_text=_read_text, list_names=_list_names
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -237,6 +170,7 @@ class VersionedCDFStreamReader(DataSourceStreamReader):
                 "versioned_cdf needs .option('tablePath', ...) or .load(path)"
             )
         self._path = path
+        self._log = _log(path)
         self._starting = str(options.get("startingversion", "earliest"))
         self._max_versions = int(options.get("maxversionsperbatch", 50))
         if self._max_versions < 1:
@@ -253,10 +187,10 @@ class VersionedCDFStreamReader(DataSourceStreamReader):
         # manifest's field metadata (re-read here rather than trusting
         # the engine-roundtripped schema to preserve metadata)
         self._phys = {f.name: f.name for f in self._table_fields}
-        vs = list_versions(self._path)
+        vs = self._log.versions()
         if vs:
             for fld in json.loads(
-                read_manifest(self._path, vs[-1])["schema"]
+                self._log.read(vs[-1])["schema"]
             )["fields"]:
                 if fld["name"] in self._phys:
                     self._phys[fld["name"]] = (
@@ -270,7 +204,7 @@ class VersionedCDFStreamReader(DataSourceStreamReader):
         if self._starting == "earliest":
             v = 0
         elif self._starting == "latest":
-            vs = list_versions(self._path)
+            vs = self._log.versions()
             if not vs:
                 raise ValueError(f"no versions published at {self._path}")
             v = vs[-1]
@@ -284,7 +218,7 @@ class VersionedCDFStreamReader(DataSourceStreamReader):
         return {"version": v}
 
     def latestOffset(self) -> dict:
-        vs = list_versions(self._path)
+        vs = self._log.versions()
         if not vs:
             raise ValueError(f"no versions published at {self._path}")
         latest = vs[-1]
@@ -321,7 +255,7 @@ class VersionedCDFStreamReader(DataSourceStreamReader):
         if ev <= sv:
             return [_CDFPart()]  # empty batch sentinel (no file)
         parts: list[_CDFPart] = []
-        retained = list_versions(self._path)
+        retained = self._log.versions()
         if not retained:
             raise ValueError(f"no versions published at {self._path}")
         first_v = sv + 1
@@ -339,7 +273,7 @@ class VersionedCDFStreamReader(DataSourceStreamReader):
         return parts or [_CDFPart()]
 
     def _snapshot_parts(self, version: int) -> list[_CDFPart]:
-        man = resolve_manifest(self._path, version)
+        man = self._log.resolve(version)
         ts = int(man.get("committed_at_ms", 0))
         births = man.get("births")
         entries = sorted(
@@ -347,7 +281,7 @@ class VersionedCDFStreamReader(DataSourceStreamReader):
         )
         out = []
         for f in man["files"]:
-            birth = _file_birth(births, f)
+            birth = tablelog.file_birth(births, f)
             applicable = tuple(
                 (tuple(d["key_cols"]), tuple(d["files"]))
                 for d in entries
@@ -362,7 +296,7 @@ class VersionedCDFStreamReader(DataSourceStreamReader):
         return out
 
     def _version_parts(self, v: int) -> list[_CDFPart]:
-        raw = read_manifest(self._path, v)  # raises if vacuumed mid-range
+        raw = self._log.read(v)  # raises if vacuumed mid-range
         op = raw.get("op")
         ts = int(raw.get("committed_at_ms", 0))
         if op in (
@@ -392,7 +326,7 @@ class VersionedCDFStreamReader(DataSourceStreamReader):
                 adds = list(raw.get("adds", []))
                 entries = list(raw.get("deletes_adds", []))
             else:
-                prev = resolve_manifest(self._path, v - 1)
+                prev = self._log.resolve(v - 1)
                 prev_files = set(prev["files"])
                 adds = [f for f in raw["files"] if f not in prev_files]
                 prev_entries = {
@@ -420,9 +354,9 @@ class VersionedCDFStreamReader(DataSourceStreamReader):
         if self._ignore_changes:
             # overwrite / rollback: emit this version's own files that
             # were not in the predecessor (Delta's ignoreChanges caveat)
-            man = resolve_manifest(self._path, v)
+            man = self._log.resolve(v)
             try:
-                prev_files = set(resolve_manifest(self._path, v - 1)["files"])
+                prev_files = set(self._log.resolve(v - 1)["files"])
             except ValueError:
                 prev_files = set()
             return [
@@ -510,10 +444,11 @@ class VersionedCDFDataSource(DataSource):
             raise ValueError(
                 "versioned_cdf needs .option('tablePath', ...) or .load(path)"
             )
-        vs = list_versions(path)
+        log = _log(path)
+        vs = log.versions()
         if not vs:
             raise ValueError(f"no versions published at {path}")
-        man = read_manifest(path, vs[-1])
+        man = log.read(vs[-1])
         base = StructType.fromJson(json.loads(man["schema"]))
         from pyspark.sql.types import LongType, StringType, TimestampType
 

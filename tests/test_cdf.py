@@ -89,11 +89,11 @@ def test_delta_manifest_fast_path_reads_only_adds(spark, tmp_path, monkeypatch):
     def boom(*a, **k):
         raise AssertionError("fast path must not materialize file lists")
 
-    monkeypatch.setattr(cdf_mod, "_resolve_manifest", boom)
+    monkeypatch.setattr(cdf_mod, "resolve_manifest", boom)
     feed = table_changes(spark, t, from_version=1, to_version=3)
     got = sorted((r["new_id"], r["change_type"]) for r in feed.collect())
     assert got == [(3, "insert"), (4, "insert"), (5, "insert")]
-    monkeypatch.setattr(cdf_mod, "_resolve_manifest", V._resolve_manifest)
+    monkeypatch.setattr(cdf_mod, "resolve_manifest", V.resolve_manifest)
     plan = feed._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     # a merge in the range breaks the fast path → keyed diff, same rows

@@ -85,9 +85,9 @@ def test_cursor_advance_has_no_absent_window(spark, tmp_path):
     (b) never report 0 once a range was handled, (c) prune superseded
     cursor files only after the newer one is visible."""
     from procurement_data_pipeline_spark.operators.cdf_consumer import (
-        _cursor_versions,
+        cursor_versions as _cursor_versions,
     )
-    from procurement_data_pipeline_spark.operators.erasure import _write_text
+    from procurement_data_pipeline_spark.storage import write_text as _write_text
 
     t, cur = str(tmp_path / "tbl"), str(tmp_path / "cursor")
     versioned_write(spark, _df(spark, [1, 2]), t)
@@ -108,9 +108,9 @@ def test_cursor_survives_extra_uncollected_files(spark, tmp_path):
     """A crash between rename and prune leaves multiple cursor files —
     read must take the newest, and the next advance cleans up."""
     from procurement_data_pipeline_spark.operators.cdf_consumer import (
-        _cursor_versions,
+        cursor_versions as _cursor_versions,
     )
-    from procurement_data_pipeline_spark.operators.erasure import _write_text
+    from procurement_data_pipeline_spark.storage import write_text as _write_text
 
     t, cur = str(tmp_path / "tbl"), str(tmp_path / "cursor")
     versioned_write(spark, _df(spark, [1]), t)
@@ -129,9 +129,9 @@ def test_legacy_single_file_cursor_migrates(spark, tmp_path):
     FILE at cursor_path. read_cursor must migrate it — not silently
     report 0 (replaying every range) or crash mkdirs-over-file."""
     from procurement_data_pipeline_spark.operators.cdf_consumer import (
-        _cursor_versions,
+        cursor_versions as _cursor_versions,
     )
-    from procurement_data_pipeline_spark.operators.erasure import _write_text
+    from procurement_data_pipeline_spark.storage import write_text as _write_text
 
     t, cur = str(tmp_path / "tbl"), str(tmp_path / "cursor")
     versioned_write(spark, _df(spark, [1, 2]), t)
@@ -150,7 +150,7 @@ def test_legacy_cursor_migration_crash_window_resumes(spark, tmp_path):
     """A crash between parking the legacy file and committing the
     directory entry leaves only the .legacy-migrating sibling — the next
     read resumes the migration instead of reporting 0."""
-    from procurement_data_pipeline_spark.operators.erasure import _write_text
+    from procurement_data_pipeline_spark.storage import write_text as _write_text
 
     cur = str(tmp_path / "cursor")
     _write_text(spark, cur + ".legacy-migrating", '{"version": 3}')
@@ -162,12 +162,10 @@ def test_advance_sweeps_committed_torn_tmps(spark, tmp_path):
     swept once a cursor ≥ v commits; a tmp for a NEWER version (a writer
     still in flight) is left alone."""
     from procurement_data_pipeline_spark.operators.cdf_consumer import (
-        _advance_cursor,
+        advance_cursor as _advance_cursor,
     )
-    from procurement_data_pipeline_spark.operators.erasure import (
-        _fs_path,
-        _write_text,
-    )
+    from procurement_data_pipeline_spark.storage import write_text as _write_text
+    from tests.hadoop_fs import fs_path as _fs_path
 
     cur = str(tmp_path / "cursor")
     _write_text(spark, cur + "/.tmp-1", "{torn")
@@ -188,10 +186,8 @@ def test_migration_probe_runs_once_and_losing_rename_is_benign(
     must treat it as benign when the legacy file is gone, not raise
     IOError on a healthy cursor."""
     from procurement_data_pipeline_spark.operators import cdf_consumer as C
-    from procurement_data_pipeline_spark.operators.erasure import (
-        _fs_path,
-        _write_text,
-    )
+    from procurement_data_pipeline_spark.storage import write_text as _write_text
+    from tests.hadoop_fs import fs_path as _fs_path
 
     cur = str(tmp_path / "cursor")
     _write_text(spark, cur, '{"version": 2}')
@@ -222,7 +218,7 @@ def test_migration_probe_runs_once_and_losing_rename_is_benign(
         if src.toString().endswith("cursor2"):
             # the other migrator already parked + committed + cleaned up
             fs2.delete(src, False)
-            C._advance_cursor(spark, cur2, 5)
+            C.advance_cursor(spark, cur2, 5)
             return False
         return real_rename(src, dst)
 
@@ -237,9 +233,9 @@ def test_probe_on_missing_cursor_does_not_memoize(spark, tmp_path):
     migrated — the later legacy file still has to be picked up, or every
     subsequent poll reports 0 and replays handled ranges."""
     from procurement_data_pipeline_spark.operators.cdf_consumer import (
-        _cursor_versions,
+        cursor_versions as _cursor_versions,
     )
-    from procurement_data_pipeline_spark.operators.erasure import _write_text
+    from procurement_data_pipeline_spark.storage import write_text as _write_text
 
     t, cur = str(tmp_path / "tbl"), str(tmp_path / "cursor")
     versioned_write(spark, _df(spark, [1, 2]), t)
@@ -261,9 +257,9 @@ def test_migration_wedge_sibling_plus_recreated_legacy_resolves(spark, tmp_path)
     must resolve the pair (larger version wins — the cursor is monotone)
     instead of failing the park-rename on every poll forever."""
     from procurement_data_pipeline_spark.operators.cdf_consumer import (
-        _cursor_versions,
+        cursor_versions as _cursor_versions,
     )
-    from procurement_data_pipeline_spark.operators.erasure import _write_text
+    from procurement_data_pipeline_spark.storage import write_text as _write_text
 
     t, cur = str(tmp_path / "tbl"), str(tmp_path / "cursor")
     versioned_write(spark, _df(spark, [1, 2]), t)
@@ -286,9 +282,9 @@ def test_migration_wedge_sibling_newer_than_recreated_legacy(spark, tmp_path):
     recreated file is the superseded artifact and must be the one
     dropped."""
     from procurement_data_pipeline_spark.operators.cdf_consumer import (
-        _cursor_versions,
+        cursor_versions as _cursor_versions,
     )
-    from procurement_data_pipeline_spark.operators.erasure import _write_text
+    from procurement_data_pipeline_spark.storage import write_text as _write_text
 
     t, cur = str(tmp_path / "tbl"), str(tmp_path / "cursor")
     versioned_write(spark, _df(spark, [1]), t)

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from procurement_data_pipeline_spark.operators.versioning import (
-    _resolve_manifest,
+    resolve_manifest as _resolve_manifest,
     drop_column,
     merge_into,
     read_table,

@@ -138,6 +138,7 @@ def test_manifest_listing_errors_propagate(spark, tmp_path, monkeypatch):
     refresh' (which would rewrite committed deltas); it must propagate."""
     import pytest as _pytest
 
+    from procurement_data_pipeline_spark import storage
     from procurement_data_pipeline_spark.operators import ivm
 
     a, b, v = str(tmp_path / "a"), str(tmp_path / "b"), str(tmp_path / "v")
@@ -148,6 +149,6 @@ def test_manifest_listing_errors_propagate(spark, tmp_path, monkeypatch):
     def boom(spark_, path_):
         raise IOError("transient FS failure")
 
-    monkeypatch.setattr(ivm, "_list_parquet_files", boom)
+    monkeypatch.setattr(storage, "list_parquet_files", boom)
     with _pytest.raises(IOError, match="transient"):
         ivm.refresh_join_view(spark, a, b, v, on="k")

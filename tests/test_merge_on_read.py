@@ -10,8 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from procurement_data_pipeline_spark.operators.versioning import (
-    _read_manifest,
-    _resolve_manifest,
+    read_manifest as _read_manifest,
+    resolve_manifest as _resolve_manifest,
     merge_into,
     optimize_table,
     read_table,
@@ -374,8 +374,8 @@ def test_birth_version_ignores_table_path_segments():
     table path like '/data/commit-7-backup/t' poisoned every file's birth
     and silently skipped delete entries (resurrecting deleted rows). The
     parse is anchored to the file's immediate parent directory."""
-    from procurement_data_pipeline_spark.operators.versioning import (
-        _birth_version,
+    from procurement_data_pipeline_spark.operators.tablelog import (
+        birth_version as _birth_version,
     )
 
     assert (
@@ -440,15 +440,17 @@ def test_verify_commit_tolerates_prelineage_successor(spark, tmp_path):
     orphanhood."""
     import json as _json
 
-    from procurement_data_pipeline_spark.operators.erasure import (
-        _read_text,
-        _write_text,
+    from procurement_data_pipeline_spark.storage import (
+        read_text as _read_text,
+        write_text as _write_text,
     )
     from procurement_data_pipeline_spark.operators.versioning import (
         ConcurrentWriteError,
-        _list_versions,
-        _manifest_uri,
+        list_versions as _list_versions,
         _verify_commit_visible,
+    )
+    from procurement_data_pipeline_spark.operators.tablelog import (
+        manifest_uri as _manifest_uri,
     )
 
     t = str(tmp_path / "t")
@@ -603,12 +605,16 @@ def test_manifest_births_recorded_and_survive_file_moves(spark, tmp_path):
     import shutil as _shutil
 
     from procurement_data_pipeline_spark.operators.versioning import (
-        _manifest_uri,
-        _read_manifest,
-        _read_text,
-        _resolve_manifest,
+        read_manifest as _read_manifest,
+        resolve_manifest as _resolve_manifest,
     )
-    from procurement_data_pipeline_spark.operators.erasure import _write_text
+    from procurement_data_pipeline_spark.operators.tablelog import (
+        manifest_uri as _manifest_uri,
+    )
+    from procurement_data_pipeline_spark.storage import (
+        read_text as _read_text,
+        write_text as _write_text,
+    )
 
     t = str(tmp_path / "t")
     versioned_write(spark, _df(spark, [(i, f"r{i}") for i in range(6)]), t)
@@ -622,8 +628,8 @@ def test_manifest_births_recorded_and_survive_file_moves(spark, tmp_path):
     )
     man = _resolve_manifest(spark, t, 3)
     # births recorded for every data file and matching the path parse
-    from procurement_data_pipeline_spark.operators.versioning import (
-        _birth_version,
+    from procurement_data_pipeline_spark.operators.tablelog import (
+        birth_version as _birth_version,
     )
 
     assert set(man["births"]) == set(man["files"])
@@ -650,7 +656,7 @@ def test_manifest_births_recorded_and_survive_file_moves(spark, tmp_path):
     raw["births"] = {
         os_sep_files[f]: b for f, b in raw["births"].items()
     }
-    from procurement_data_pipeline_spark.operators.erasure import _fs_path
+    from tests.hadoop_fs import fs_path as _fs_path
 
     fs, p, _ = _fs_path(spark, _manifest_uri(t, 3))
     fs.delete(p, False)

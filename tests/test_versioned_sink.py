@@ -115,7 +115,7 @@ def test_streaming_sink_maintains_sticky_stats(spark, tmp_path):
     through the streaming sink's appends (stats are sticky in
     versioned_write) — the microbatch files are immediately prunable."""
     from procurement_data_pipeline_spark.operators.versioning import (
-        _read_manifest,
+        read_manifest as _read_manifest,
         latest_version,
         plan_scan,
     )
@@ -142,7 +142,7 @@ def test_streaming_sink_under_delta_manifests(spark, tmp_path, monkeypatch):
     resolve exactly."""
     from procurement_data_pipeline_spark.operators import versioning as V
     from procurement_data_pipeline_spark.operators.versioning import (
-        _read_manifest,
+        read_manifest as _read_manifest,
     )
 
     monkeypatch.setattr(V, "_DELTA_MIN_FILES", 0)
@@ -169,8 +169,8 @@ def test_replay_guard_survives_manifest_expiry(spark, tmp_path):
     stream-tagged manifest; the durable batch cursor must still block a
     replayed batch from re-appending (and keep the identity check live)."""
     from procurement_data_pipeline_spark.operators.versioning import (
-        _list_versions,
-        _read_manifest,
+        list_versions as _list_versions,
+        read_manifest as _read_manifest,
         optimize_table,
         vacuum,
     )
@@ -205,9 +205,7 @@ def test_torn_id_json_degrades_to_legacy_not_wedged(spark, tmp_path):
     raising."""
     import json as _json
 
-    from procurement_data_pipeline_spark.operators.erasure import (
-        _write_text,
-    )
+    from procurement_data_pipeline_spark.storage import write_text as _write_text
     from procurement_data_pipeline_spark.streaming.versioned_sink import (
         _state_dir,
         _stream_states,

@@ -228,7 +228,7 @@ def test_call_write_cadence_and_merge_threshold_params(spark, tmp_path):
     key_collect_threshold on CALL merge (forcing the anti-join path)."""
     from procurement_data_pipeline_spark.operators.versioned_sql import sql
     from procurement_data_pipeline_spark.operators.versioning import (
-        _read_manifest,
+        read_manifest as _read_manifest,
         read_table,
     )
 

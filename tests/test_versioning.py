@@ -7,7 +7,7 @@ import json
 
 import pytest
 
-from procurement_data_pipeline_spark.operators.erasure import _write_text
+from procurement_data_pipeline_spark.storage import write_text as _write_text
 from procurement_data_pipeline_spark.operators.versioning import (
     ConcurrentWriteError,
     history,
@@ -202,7 +202,7 @@ def test_merge_into_upsert_prunes_untouched_files(spark, tmp_path):
     assert _ids(read_table(spark, t, version=2)) == [1, 2, 3, 100, 101]
     # the untouched file is carried VERBATIM (same URI in both manifests)
     from procurement_data_pipeline_spark.operators.versioning import (
-        _read_manifest,
+        read_manifest as _read_manifest,
     )
 
     before, after = _read_manifest(spark, t, 2), _read_manifest(spark, t, 3)
@@ -430,7 +430,7 @@ def test_publish_race_has_exactly_one_winner(spark, tmp_path):
         wins = list(ex.map(attempt, range(8)))
     assert sum(wins) == 1
     # the winning manifest is intact JSON (no torn writes under the race)
-    man = V._read_manifest(spark, t, 2)
+    man = V.read_manifest(spark, t, 2)
     assert man["version"] == 2 and man["writer"] == wins.index(True)
     # no temp files leak from the losers
     leftovers = [
@@ -445,7 +445,7 @@ def test_listing_failure_propagates_not_empty_manifest(spark, tmp_path, monkeypa
     """ADVICE r5: a transient listing failure after a successful write must
     PROPAGATE — round 5 swallowed it into files=[], publishing a manifest
     missing the just-written data (silent loss reported as success)."""
-    from procurement_data_pipeline_spark.operators import versioning as V
+    from procurement_data_pipeline_spark import storage
 
     t = str(tmp_path / "tbl")
     versioned_write(spark, _df(spark, [1]), t)
@@ -453,7 +453,7 @@ def test_listing_failure_propagates_not_empty_manifest(spark, tmp_path, monkeypa
     def boom(*_a, **_k):
         raise IOError("transient listing failure")
 
-    monkeypatch.setattr(V, "_list_parquet_files", boom)
+    monkeypatch.setattr(storage, "list_parquet_files", boom)
     with pytest.raises(IOError, match="transient"):
         versioned_write(spark, _df(spark, [2]), t, mode="append")
     monkeypatch.undo()
@@ -712,7 +712,7 @@ def test_delta_manifest_append_chain(spark, tmp_path, delta_mode):
     every k-th version is a full checkpoint manifest; reads and stats
     resolve identically through the chain."""
     from procurement_data_pipeline_spark.operators.versioning import (
-        _read_manifest,
+        read_manifest as _read_manifest,
         plan_scan,
     )
 
@@ -746,11 +746,13 @@ def test_delta_merge_and_vacuum_checkpoints(spark, tmp_path, delta_mode):
     checkpoint for retained deltas whose base is expired, then reads stay
     exact, expired versions refuse, and a rerun is a no-op."""
     from procurement_data_pipeline_spark.operators.versioning import (
-        _ckpt_uri,
-        _read_manifest,
+        read_manifest as _read_manifest,
         merge_into,
     )
-    from procurement_data_pipeline_spark.operators.erasure import _fs_path
+    from procurement_data_pipeline_spark.operators.tablelog import (
+        checkpoint_uri as _ckpt_uri,
+    )
+    from tests.hadoop_fs import fs_path as _fs_path
 
     t = str(tmp_path / "tbl")
     versioned_write(spark, _df_range(spark, 0, 100), t, stats_cols=["id"])
@@ -891,7 +893,7 @@ def test_vacuum_ctmp_sweep_spares_young_temps(spark, tmp_path):
     vacuum's in-flight checkpoint temp — only wreckage older than the
     grace period (a crashed run's temp is old by the next maintenance
     window)."""
-    from procurement_data_pipeline_spark.operators.erasure import _fs_path
+    from tests.hadoop_fs import fs_path as _fs_path
 
     t = str(tmp_path / "tbl")
     versioned_write(spark, _df(spark, [1]), t)
@@ -913,7 +915,7 @@ def test_delta_cadence_per_call_parameters(spark, tmp_path):
     module constants for one commit, so a fixture (or a Delta-style table
     property layer) can engage the delta path without monkeypatching."""
     from procurement_data_pipeline_spark.operators.versioning import (
-        _read_manifest,
+        read_manifest as _read_manifest,
     )
 
     t = str(tmp_path / "tbl")
@@ -1019,11 +1021,11 @@ def test_concurrent_append_writers_race_delta_chain_liveness(spark, tmp_path):
     .ctmp-* orphans remain in the log."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from procurement_data_pipeline_spark.operators.erasure import _fs_path
+    from tests.hadoop_fs import fs_path as _fs_path
     from procurement_data_pipeline_spark.operators.versioning import (
-        _list_versions,
-        _read_manifest,
-        _resolve_manifest,
+        list_versions as _list_versions,
+        read_manifest as _read_manifest,
+        resolve_manifest as _resolve_manifest,
         write_with_retry,
     )
 
@@ -1188,7 +1190,7 @@ def test_pinned_write_into_vacuumed_slot_raises_not_silent(spark, tmp_path):
     latest. It must raise ConcurrentWriteError and leave no orphan
     manifest behind."""
     from procurement_data_pipeline_spark.operators.versioning import (
-        _list_versions,
+        list_versions as _list_versions,
     )
 
     t = str(tmp_path / "tbl")
@@ -1460,6 +1462,9 @@ def test_committed_at_and_timestamp_resolution(spark, tmp_path, monkeypatch):
     import datetime
 
     from procurement_data_pipeline_spark.operators import versioning as V
+    from procurement_data_pipeline_spark.operators.tablelog import manifest_uri
+    from procurement_data_pipeline_spark.storage import read_text
+    from tests.hadoop_fs import fs_path
 
     t = str(tmp_path / "ts")
     clock = iter([1_000, 5_000, 3_000])  # v3's clock stepped BACKWARD
@@ -1468,7 +1473,7 @@ def test_committed_at_and_timestamp_resolution(spark, tmp_path, monkeypatch):
     versioned_write(spark, _df(spark, [2]), t)
     versioned_write(spark, _df(spark, [3]), t)
     recorded = [
-        V._read_manifest(spark, t, v)["committed_at_ms"] for v in (1, 2, 3)
+        V.read_manifest(spark, t, v)["committed_at_ms"] for v in (1, 2, 3)
     ]
     assert recorded == [1_000, 5_000, 3_000]
 
@@ -1494,12 +1499,12 @@ def test_committed_at_and_timestamp_resolution(spark, tmp_path, monkeypatch):
     # pre-upgrade manifests (no committed_at_ms) count as epoch 0:
     # reachable by version pinning, older than any real timestamp
     raw = json.loads(
-        V._read_text(spark, V._manifest_uri(t, 1))
+        read_text(spark, manifest_uri(t, 1))
     )
     raw.pop("committed_at_ms")
-    fs, p, _ = V._fs_path(spark, V._manifest_uri(t, 1))
+    fs, p, _ = fs_path(spark, manifest_uri(t, 1))
     fs.delete(p, False)
-    _write_text(spark, V._manifest_uri(t, 1), json.dumps(raw))
+    _write_text(spark, manifest_uri(t, 1), json.dumps(raw))
     assert V.version_as_of_timestamp(spark, t, 999) == 1  # epoch-0 prefix
 
 
@@ -1639,7 +1644,7 @@ def test_clone_shallow_and_deep(spark, tmp_path):
     dependency. Either way the clone is an independent table: writes at
     dst never appear at src, and dst's vacuum never deletes src data."""
     from procurement_data_pipeline_spark.operators.versioning import (
-        _resolve_manifest,
+        resolve_manifest as _resolve_manifest,
         clone_table,
         merge_into,
         vacuum,
@@ -1805,6 +1810,7 @@ def test_optimize_rebases_over_interleaved_append(spark, tmp_path, monkeypatch):
     and republishes at head+1. Both writers' rows survive, no user-level
     retry."""
     from procurement_data_pipeline_spark.operators import versioning as V
+    from procurement_data_pipeline_spark.operators.tablelog import file_birth
 
     t = str(tmp_path / "t")
     versioned_write(spark, _df(spark, [1, 2]), t)  # v1
@@ -1828,7 +1834,7 @@ def test_optimize_rebases_over_interleaved_append(spark, tmp_path, monkeypatch):
     # the interleaved append's file carried VERBATIM (born at v3, not
     # rewritten by a commit that planned before it existed)
     v3_adds = [
-        f for f in man["files"] if V._file_birth(man["births"], f) == 3
+        f for f in man["files"] if file_birth(man["births"], f) == 3
     ]
     assert v3_adds and all("commit-00000003" in f for f in v3_adds)
 
@@ -1913,7 +1919,7 @@ def test_vacuum_retain_hours_age_boundary(spark, tmp_path, monkeypatch):
 
 def _list_versions_of(spark, t):
     from procurement_data_pipeline_spark.operators.versioning import (
-        _list_versions,
+        list_versions as _list_versions,
     )
 
     return _list_versions(spark, t)
@@ -1923,7 +1929,7 @@ def test_vacuum_dry_run_reports_without_touching(spark, tmp_path):
     """VACUUM DRY RUN: same counts as the real run would produce, zero
     mutation — every version stays readable, no checkpoint appears."""
     from procurement_data_pipeline_spark.operators.versioning import (
-        _list_versions,
+        list_versions as _list_versions,
         vacuum,
     )
 
@@ -1953,7 +1959,7 @@ def test_check_constraints_enforced_everywhere(spark, tmp_path):
     violation aborts pre-publish (no version, no orphan files); rollback
     restores the old constraint set; clones keep enforcing."""
     from procurement_data_pipeline_spark.operators.versioning import (
-        _list_versions,
+        list_versions as _list_versions,
         clone_table,
         merge_into,
     )
@@ -1996,7 +2002,7 @@ def test_check_constraints_enforced_everywhere(spark, tmp_path):
     # rollback restores the version's OWN constraint set
     from procurement_data_pipeline_spark.operators.versioning import (
         rollback,
-        _read_manifest,
+        read_manifest as _read_manifest,
         latest_version,
     )
 
