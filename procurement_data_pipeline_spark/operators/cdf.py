@@ -26,13 +26,21 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from procurement_data_pipeline_spark.operators import tablelog
 from procurement_data_pipeline_spark.operators.cdc import snapshot_diff
 from procurement_data_pipeline_spark.operators.versioning import (
+    commit_times,
     latest_version,
+    physical_names,
+    plan_scan,
+    read_files,
     read_manifest,
     read_table,
     resolve_manifest,
+    ts_to_ms,
+    version_as_of_timestamp,
 )
 
 
@@ -67,31 +75,17 @@ def table_changes(
     Effective timestamps are the running max down the version chain
     (the same non-monotonic-clock adjustment as ``TIMESTAMP AS OF``).
     """
-    from procurement_data_pipeline_spark.operators.versioning import (
-        _ts_to_ms,
-        list_versions,
-        version_as_of_timestamp,
-    )
-
     if from_timestamp is not None:
         if from_version is not None:
             raise ValueError("pass from_version OR from_timestamp, not both")
-        t = _ts_to_ms(from_timestamp)
-        versions = list_versions(spark, table_path)
-        if not versions:
-            raise ValueError(f"no versions published at {table_path}")
-        first_at_or_after = None
-        eff = 0
-        for v in versions:
-            eff = max(
-                eff,
-                int(read_manifest(spark, table_path, v).get(
-                    "committed_at_ms", 0
-                )),
-            )
+        t = ts_to_ms(from_timestamp)
+        first_at_or_after = eff = None
+        for v, eff in commit_times(spark, table_path):
             if eff >= t:
                 first_at_or_after = v
                 break
+        if eff is None:
+            raise ValueError(f"no versions published at {table_path}")
         if first_at_or_after is None:
             raise ValueError(
                 f"from_timestamp {from_timestamp!r} is after the latest "
@@ -176,18 +170,12 @@ def table_changes(
             # manifest schema (not to_df.schema) so column-mapping
             # physical names resolve — every raw manifest form carries
             # the schema key.
-            from pyspark.sql.types import StructType as _ST
-
-            from procurement_data_pipeline_spark.operators.versioning import (
-                _read_data_files,
-            )
-
-            man_schema = _ST.fromJson(
+            man_schema = StructType.fromJson(
                 json.loads(
                     read_manifest(spark, table_path, to_version)["schema"]
                 )
             )
-            base = _read_data_files(spark, man_schema, added)
+            base = read_files(spark, man_schema, added)
         return base.select(
             *keys,
             *[F.lit(None).cast(base.schema[c].dataType).alias(f"old_{c}") for c in compare],
@@ -247,15 +235,6 @@ def _native_mor_feed(
     op, entries disagree on key columns, or the caller pinned different
     ``key_cols`` than the entries use.
     """
-    from pyspark.sql.types import StructType as _ST
-
-    from procurement_data_pipeline_spark.operators.versioning import (
-        _apply_deletes,
-        _phys_map,
-        _read_data_files,
-        plan_scan,
-    )
-
     if from_version <= 0:
         return None
     per_version: list[tuple] = []  # (v, adds, new_entries)
@@ -268,29 +247,14 @@ def _native_mor_feed(
         )
         if op != "append" and not mor:
             return None
-        if "delta_of" in raw:
-            if raw.get("removes"):
-                return None
-            adds = list(raw.get("adds", []))
-            new_entries = list(raw.get("deletes_adds", []))
-            if new_entries and not mor:
-                return None
-        else:
-            if prev_resolved is None or prev_resolved["version"] != v - 1:
-                prev_resolved = resolve_manifest(spark, table_path, v - 1)
-            prev_files = set(prev_resolved["files"])
-            if not prev_files <= set(raw["files"]):
-                return None  # something removed: not pure growth
-            adds = [f for f in raw["files"] if f not in prev_files]
-            prev_keys = {
-                json.dumps(d, sort_keys=True)
-                for d in prev_resolved.get("deletes", [])
-            }
-            new_entries = [
-                d
-                for d in raw.get("deletes", [])
-                if json.dumps(d, sort_keys=True) not in prev_keys
-            ]
+        if "delta_of" not in raw and (
+            prev_resolved is None or prev_resolved["version"] != v - 1
+        ):
+            prev_resolved = resolve_manifest(spark, table_path, v - 1)
+        adds, removes, new_entries = tablelog.changes(raw, prev_resolved)
+        if removes or (new_entries and not mor):
+            return None  # something removed: not pure growth
+        if "delta_of" not in raw:
             prev_resolved = raw  # full manifest: usable as next prev
         per_version.append((v, adds, new_entries))
     all_entries = [d for _, _, es in per_version for d in es]
@@ -299,10 +263,10 @@ def _native_mor_feed(
         if any(d["key_cols"] != kc0 for d in all_entries[1:]):
             return None
     # schema / mapping of the range end pins names for the whole feed
-    end_schema = _ST.fromJson(
+    end_schema = StructType.fromJson(
         json.loads(read_manifest(spark, table_path, to_version)["schema"])
     )
-    rev = {p: l for l, p in _phys_map(end_schema).items()}
+    rev = {p: l for l, p in physical_names(end_schema).items()}
     logical_keys = (
         [rev.get(k, k) for k in all_entries[0]["key_cols"]]
         if all_entries
@@ -329,7 +293,7 @@ def _native_mor_feed(
     parts: list[DataFrame] = []
     for v, adds, new_entries in per_version:
         merge_adds_df = (
-            _read_data_files(spark, end_schema, adds) if adds else None
+            read_files(spark, end_schema, adds) if adds else None
         )
         if not new_entries:
             if merge_adds_df is not None:
@@ -350,7 +314,7 @@ def _native_mor_feed(
             .distinct()
         )
         man_prev = resolve_manifest(spark, table_path, v - 1)
-        prev_schema = _ST.fromJson(json.loads(man_prev["schema"]))
+        prev_schema = StructType.fromJson(json.loads(man_prev["schema"]))
         kept = list(man_prev["files"])
         fk = logical_keys[0]
         if man_prev.get("stats_cols") and fk in man_prev["stats_cols"]:
@@ -361,7 +325,7 @@ def _native_mor_feed(
                 spark, table_path, fk, bounds["lo"], bounds["hi"],
                 version=v - 1, _manifest=man_prev,
             )
-        old_v = _apply_deletes(
+        old_v = read_files(
             spark, prev_schema, kept, man_prev.get("deletes", []),
             births=man_prev.get("births"),
         ).join(F.broadcast(keys_df), on=logical_keys, how="semi")

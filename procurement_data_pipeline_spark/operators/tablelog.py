@@ -1,8 +1,9 @@
-"""The versioned-table log format — names, version parsing, manifest fold.
+"""The versioned-table log format — names, version parsing, the manifest
+builder every commit uses and the fold every reader uses.
 
 One definition of the on-disk contract :mod:`.versioning` writes, for
-every reader. Pure Python with no SparkSession and no IO of its own:
-:class:`TableLog` takes the three reads it needs as callables, so
+every writer and reader. Pure Python with no SparkSession and no IO of
+its own: :class:`TableLog` takes the three reads it needs as callables, so
 ``versioning`` reads through :mod:`procurement_data_pipeline_spark.storage`
 (Hadoop FS) and the streaming source, whose planner runs in a
 data-source worker without a session, reads through local/pyarrow IO.
@@ -62,6 +63,201 @@ def versions(names: Iterable[str], prefix: str = "v", suffix: str = ".json") -> 
     """The sorted versions among directory entry ``names``."""
     return sorted(
         v for v in (parse_version(n, prefix, suffix) for n in names) if v is not None
+    )
+
+
+# Incremental (delta) manifests — the 100 TB metadata shape. A full
+# manifest names EVERY file of its version, so at ~1M files each append
+# would serialize an O(table) JSON; Delta/Iceberg instead log per-commit
+# adds/removes with periodic full checkpoints. Same here: once a table
+# has ≥ _DELTA_MIN_FILES files, append/merge commits write only their
+# adds/removes (+ per-file stats for the adds) keyed by ``delta_of``; a
+# full manifest is still forced every _CHECKPOINT_EVERY versions so a
+# read resolves at most that many small JSONs. Overwrite / rollback /
+# optimize replace the file list wholesale and stay full. ``vacuum``
+# materializes a ``c{N}.json`` checkpoint for any retained delta whose
+# base manifest is being expired, so resolution never needs an expired
+# version.
+_DELTA_MIN_FILES = 64
+_CHECKPOINT_EVERY = 16
+
+# Every key any manifest form can carry. ``extra`` user metadata is checked
+# against THIS set, not against the keys of the manifest instance being
+# built: a delta manifest carries no 'files'/'stats' key, so checking the
+# instance would let extra={'stats': ...} through — and a stats-less
+# table's plan_scan would then skip files based on injected n_rows==0
+# entries. Reserved means reserved in every mode.
+RESERVED_KEYS = frozenset(
+    {
+        "version",
+        "op",
+        "base_version",
+        "files",
+        "n_files",
+        "schema",
+        "stats",
+        "stats_cols",
+        "delta_of",
+        "adds",
+        "removes",
+        "stats_adds",
+        "cluster_by",
+        "zorder_cols",
+        "merge",
+        "commit_id",
+        "base_commit_id",
+        "deletes",
+        "deletes_adds",
+        "committed_at_ms",
+        "births",
+        "clone_src",
+        "clone_src_version",
+        "constraints",
+        "optimize_scope",
+        "dropped_cols",
+    }
+)
+
+
+def check_extra(extra: dict | None) -> None:
+    """Refuse user metadata that would shadow a manifest key."""
+    reserved = RESERVED_KEYS & set(extra or ())
+    if reserved:
+        raise ValueError(
+            f"extra metadata shadows reserved manifest keys: {sorted(reserved)}"
+        )
+
+
+# "take it from the base manifest" for build_manifest's stats_cols and
+# constraints (None is a real value there: no stats, no constraints)
+_CARRY = object()
+
+
+def build_manifest(
+    base: dict | None,
+    version: int,
+    op: str,
+    carried: list[str] = (),
+    new: list[str] = (),
+    *,
+    schema: str | None = None,
+    deletes: list[dict] | None = None,
+    deletes_adds: list[dict] = (),
+    stats_cols=_CARRY,
+    constraints=_CARRY,
+    stats: dict | None = None,
+    fields: dict | None = None,
+    delta: bool = False,
+    delta_min_files: int | None = None,
+    checkpoint_every: int | None = None,
+) -> dict:
+    """The manifest publishing version ``version`` — the write-side
+    inverse of :func:`fold`, without lineage (the publisher adds it).
+
+    ``base`` is the RESOLVED manifest the commit builds on (None: the
+    table starts from nothing — a first write, an overwrite, a deep
+    clone). The new file list is ``carried`` (files of ``base``, which
+    keep their births) followed by ``new`` (born at ``version``).
+    Everything else carries from ``base`` unless replaced: ``schema``;
+    ``deletes`` (a replacement delete-entry list; default: the base's
+    entries plus ``deletes_adds``); ``stats_cols`` and ``constraints``;
+    ``dropped_cols``. ``stats`` holds per-file stats the caller computed
+    (the new files', or any override); the base's entries for carried
+    files carry only while the stats column set is unchanged. ``fields``
+    are op-specific keys (``merge``, ``zorder_cols``, ...) set last.
+
+    With ``delta`` the commit is written as a DELTA against ``base`` when
+    the table is big enough (``delta_min_files``, default
+    _DELTA_MIN_FILES), the version is not a checkpoint multiple
+    (``checkpoint_every``, default _CHECKPOINT_EVERY), the stats column
+    set is unchanged (a change is a one-commit backfill) and the delete
+    list is not replaced; ``fold(base, result)`` then equals the FULL
+    form."""
+    prev = base or {}
+    carried, new = list(carried), list(new)
+    if stats_cols is _CARRY:
+        stats_cols = prev.get("stats_cols")
+    if constraints is _CARRY:
+        constraints = prev.get("constraints")
+    same_stats = (list(stats_cols) if stats_cols else None) == prev.get("stats_cols")
+    dmin = _DELTA_MIN_FILES if delta_min_files is None else delta_min_files
+    every = _CHECKPOINT_EVERY if checkpoint_every is None else checkpoint_every
+    is_delta = (
+        delta
+        and base is not None
+        and deletes is None
+        and same_stats
+        and len(base["files"]) >= dmin
+        and version % every != 0
+    )
+    out = {
+        "version": version,
+        "op": op,
+        "base_version": prev.get("version"),
+        "n_files": len(carried) + len(new),
+        "schema": schema if schema is not None else prev["schema"],
+    }
+    if is_delta:
+        keep = set(carried)
+        out["delta_of"] = base["version"]
+        out["adds"] = new
+        out["removes"] = [f for f in base["files"] if f not in keep]
+        if deletes_adds:
+            out["deletes_adds"] = list(deletes_adds)
+    else:
+        out["files"] = carried + new
+        births = prev.get("births")
+        out["births"] = {
+            **{f: file_birth(births, f) for f in carried},
+            **{f: version for f in new},
+        }
+        # carried entries still mask carried files' rows: dropping them
+        # would resurrect deleted rows
+        if deletes is None:
+            deletes = list(prev.get("deletes", [])) + list(deletes_adds)
+        if deletes:
+            out["deletes"] = list(deletes)
+    # recorded on BOTH forms, so inheritance never needs more than the
+    # previous manifest
+    if prev.get("dropped_cols"):
+        out["dropped_cols"] = prev["dropped_cols"]
+    if constraints:
+        out["constraints"] = list(constraints)
+    if stats_cols:
+        out["stats_cols"] = list(stats_cols)
+        if is_delta:
+            out["stats_adds"] = dict(stats or {})
+        else:
+            base_stats = prev.get("stats", {}) if same_stats else {}
+            out["stats"] = {
+                **{f: base_stats[f] for f in carried if f in base_stats},
+                **(stats or {}),
+            }
+    out.update(fields or {})
+    return out
+
+
+def changes(raw: dict, prev: dict | None) -> tuple[list[str], list[str], list[dict]]:
+    """What the commit whose manifest is ``raw`` did: ``(adds, removes,
+    new delete entries)``. A delta manifest says so itself; a full one
+    is diffed against ``prev``, the RESOLVED manifest of the version
+    before it (unused, and may be None, for a delta)."""
+    if "delta_of" in raw:
+        return (
+            list(raw["adds"]),
+            list(raw.get("removes", [])),
+            list(raw.get("deletes_adds", [])),
+        )
+    before, after = set(prev["files"]), set(raw["files"])
+    seen = {json.dumps(d, sort_keys=True) for d in prev.get("deletes", [])}
+    return (
+        [f for f in raw["files"] if f not in before],
+        [f for f in prev["files"] if f not in after],
+        [
+            d
+            for d in raw.get("deletes", [])
+            if json.dumps(d, sort_keys=True) not in seen
+        ],
     )
 
 

@@ -78,62 +78,9 @@ def resolve_manifest(spark: SparkSession, table_path: str, version: int) -> dict
     return _log(spark, table_path).resolve(version)
 
 
-# Incremental (delta) manifests — the 100 TB metadata shape. A full
-# manifest names EVERY file of its version, so at ~1M files each append
-# would serialize an O(table) JSON; Delta/Iceberg instead log per-commit
-# adds/removes with periodic full checkpoints. Same here: once a table
-# has ≥ _DELTA_MIN_FILES files, append/merge commits write only their
-# adds/removes (+ per-file stats for the adds) keyed by ``delta_of``; a
-# full manifest is still forced every _CHECKPOINT_EVERY versions so a
-# read resolves at most that many small JSONs. Overwrite / rollback /
-# optimize replace the file list wholesale and stay full. ``vacuum``
-# materializes a ``c{N}.json`` checkpoint for any retained delta whose
-# base manifest is being expired, so resolution never needs an expired
-# version.
-_DELTA_MIN_FILES = 64
-_CHECKPOINT_EVERY = 16
-
 # distinguishes "caller did not pin a snapshot" from "caller read an
 # empty table" (expected_base=None) in versioned_write
 _BASE_UNSET = object()
-
-# Every key any manifest form can carry. ``extra`` user metadata is checked
-# against THIS set, not against the keys of the manifest instance being
-# built: a delta manifest carries no 'files'/'stats' key, so checking the
-# instance would let extra={'stats': ...} through — and a stats-less
-# table's plan_scan would then skip files based on injected n_rows==0
-# entries (ADVICE r7). Reserved means reserved in every mode.
-_RESERVED_MANIFEST_KEYS = frozenset(
-    {
-        "version",
-        "op",
-        "base_version",
-        "files",
-        "n_files",
-        "schema",
-        "stats",
-        "stats_cols",
-        "delta_of",
-        "adds",
-        "removes",
-        "stats_adds",
-        "cluster_by",
-        "zorder_cols",
-        "merge",
-        "commit_id",
-        "base_commit_id",
-        "deletes",
-        "deletes_adds",
-        "committed_at_ms",
-        "births",
-        "clone_src",
-        "clone_src_version",
-        "constraints",
-        "optimize_scope",
-        "dropped_cols",
-    }
-)
-
 
 def _check_constraints(
     spark: SparkSession,
@@ -159,10 +106,7 @@ def _check_constraints(
     if not constraints or not files:
         return
     schema = StructType.fromJson(json.loads(schema_json))
-    if deletes:
-        df = _apply_deletes(spark, schema, files, deletes, births=births)
-    else:
-        df = _read_data_files(spark, schema, files)
+    df = read_files(spark, schema, files, deletes or (), births=births)
     aggs = [
         F.sum(
             F.when(~F.coalesce(F.expr(c), F.lit(True)), 1).otherwise(0)
@@ -214,13 +158,11 @@ def _now_ms() -> int:
 # ---------------------------------------------------------------------------
 
 
-def _phys_of(field: "StructField") -> str:
-    return (field.metadata or {}).get("physical", field.name)
-
-
-def _phys_map(schema: StructType) -> dict[str, str]:
+def physical_names(schema: StructType) -> dict[str, str]:
     """logical name -> on-disk (physical) name; identity without mapping."""
-    return {f.name: _phys_of(f) for f in schema.fields}
+    return {
+        f.name: (f.metadata or {}).get("physical", f.name) for f in schema.fields
+    }
 
 
 def _is_identity_map(phys: dict[str, str]) -> bool:
@@ -231,61 +173,54 @@ def _to_physical(df: DataFrame, schema_json: str) -> DataFrame:
     """Rename a logical-named DataFrame to physical names for writing.
     Columns not in the table schema (never happens on validated paths)
     pass through unchanged; identity mapping is a no-op."""
-    phys = _phys_map(StructType.fromJson(json.loads(schema_json)))
+    phys = physical_names(StructType.fromJson(json.loads(schema_json)))
     if _is_identity_map(phys):
         return df
     return df.toDF(*[phys.get(c, c) for c in df.columns])
 
 
-def _read_data_files(
-    spark: SparkSession, schema: "StructType", files: list[str]
-) -> DataFrame:
-    """Read data files under the LOGICAL schema: files store physical
-    names, so under a mapping the read schema uses physical names and a
-    projection aliases back — one Project node, no data movement. The
-    identity fast path is byte-for-byte the pre-mapping plan."""
-    phys = _phys_map(schema)
-    if _is_identity_map(phys):
-        return spark.read.schema(schema).parquet(*files)
-    from pyspark.sql import functions as F
-
-    pschema = StructType(
-        [
-            StructField(phys[f.name], f.dataType, f.nullable)
-            for f in schema.fields
-        ]
-    )
-    return (
-        spark.read.schema(pschema)
-        .parquet(*files)
-        .select(
-            *[F.col(phys[f.name]).alias(f.name) for f in schema.fields]
-        )
-    )
-
-
-def _apply_deletes(
+def read_files(
     spark: SparkSession,
-    schema: "StructType",
+    schema: StructType,
     files: list[str],
-    deletes: list[dict],
+    deletes: list[dict] = (),
     births: dict | None = None,
 ) -> DataFrame:
-    """Read ``files`` with every applicable equality-delete entry
-    anti-joined out. Files are grouped by which suffix of the
-    (version-ordered) delete list applies to them — at most
-    len(deletes)+1 groups — so the plan stays bounded by the delete-entry
-    count, which OPTIMIZE resets to zero. NULL-keyed data rows survive
-    every anti-join (delete keys are validated non-null; NULL = k is
-    never true)."""
+    """Read data ``files`` under the LOGICAL ``schema`` with every
+    applicable equality-delete entry of ``deletes`` anti-joined out
+    (``births`` is the manifest's birth map, see :func:`tablelog.file_birth`).
+
+    Files store physical names, so under a column mapping the read
+    schema uses physical names and a projection aliases back — one
+    Project node, no data movement; the identity fast path is
+    byte-for-byte the pre-mapping plan. Files are grouped by which
+    suffix of the (version-ordered) delete list applies to them — at
+    most len(deletes)+1 groups — so the plan stays bounded by the
+    delete-entry count, which OPTIMIZE resets to zero. NULL-keyed data
+    rows survive every anti-join (delete keys are validated non-null;
+    NULL = k is never true)."""
     import bisect
 
     from pyspark.sql import functions as F
 
     if not files:
         return spark.createDataFrame([], schema)
+    phys = physical_names(schema)
+    pschema = StructType(
+        [StructField(phys[f.name], f.dataType, f.nullable) for f in schema.fields]
+    )
+
+    def read(group: list[str]) -> DataFrame:
+        if _is_identity_map(phys):
+            return spark.read.schema(schema).parquet(*group)
+        return (
+            spark.read.schema(pschema)
+            .parquet(*group)
+            .select(*[F.col(phys[f.name]).alias(f.name) for f in schema.fields])
+        )
+
     if not deletes:
-        return _read_data_files(spark, schema, files)
+        return read(files)
     entries = sorted(deletes, key=lambda d: d["version"])
     versions = [d["version"] for d in entries]
     groups: dict[int, list[str]] = {}
@@ -300,7 +235,7 @@ def _apply_deletes(
     # name the ON-DISK (physical) columns of the key files; under a
     # column mapping they alias back to the current LOGICAL name so the
     # anti-join follows a rename without touching the entry.
-    rev = {p: l for l, p in _phys_map(schema).items()}
+    rev = {p: l for l, p in phys.items()}
     entry_logical = [
         [rev.get(k, k) for k in d["key_cols"]] for d in entries
     ]
@@ -314,7 +249,7 @@ def _apply_deletes(
     ]
     parts: list[DataFrame] = []
     for idx, fs_group in sorted(groups.items()):
-        df = _read_data_files(spark, schema, fs_group)
+        df = read(fs_group)
         for lcols, keys in zip(entry_logical[idx:], entry_keys[idx:]):
             df = df.join(keys, on=lcols, how="left_anti")
         parts.append(df)
@@ -322,6 +257,44 @@ def _apply_deletes(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def _write_commit(
+    spark: SparkSession,
+    df: DataFrame,
+    commit_dir: str,
+    schema_json: str,
+    constraints: list[str] | None = None,
+    recheck: dict | None = None,
+    write=None,
+) -> list[str]:
+    """Write the logical-named ``df`` under its physical names into the
+    fresh ``commit_dir`` and return the data files that landed, once the
+    CHECK ``constraints`` hold for them — and for the files of manifest
+    ``recheck`` too, read through its delete mask (the ADD CONSTRAINT
+    scan; the new files' commit-dir birth escapes every carried entry).
+    ``write(frame, dir)`` replaces the plain parquet write. Any failure
+    deletes the directory: no reader ever saw it."""
+    try:
+        out = _to_physical(df, schema_json)
+        if write is None:
+            out.write.mode("error").parquet(commit_dir)
+        else:
+            write(out, commit_dir)
+        # the parquet committer always creates the directory (a _SUCCESS
+        # marker and at least one part file even for an empty frame), so
+        # a listing failure is a REAL filesystem error and must propagate:
+        # swallowing it would publish a manifest without the new files
+        files = sorted(storage.list_parquet_files(spark, commit_dir))
+        old = recheck or {}
+        _check_constraints(
+            spark, schema_json, old.get("files", []) + files, constraints,
+            deletes=old.get("deletes"), births=old.get("births"),
+        )
+    except BaseException:
+        storage.delete(spark, commit_dir, True)
+        raise
+    return files
 
 
 def _lineage(prev_manifest: dict | None) -> dict:
@@ -337,11 +310,48 @@ def _lineage(prev_manifest: dict | None) -> dict:
     }
 
 
+def _commit(
+    spark: SparkSession,
+    table_path: str,
+    manifest: dict,
+    parent: dict | None,
+    dirs: list[str] = (),
+    extra: dict | None = None,
+    rebase=None,
+) -> dict:
+    """Publish ``manifest`` (from :func:`tablelog.build_manifest`) — the
+    commit point of every operation. Adds lineage against ``parent``
+    (the latest manifest the writer observed) and the caller's ``extra``
+    metadata. Losing the version race deletes ``dirs`` (the commit's
+    data, never visible) and raises :class:`ConcurrentWriteError` —
+    unless ``rebase(lost_manifest)`` returns a ``(manifest, parent)`` to
+    publish instead. Returns the published manifest."""
+    tablelog.check_extra(extra)
+    while True:
+        manifest.update(_lineage(parent))
+        manifest.update(extra or {})
+        try:
+            _publish(spark, table_path, manifest)
+            break
+        except ConcurrentWriteError:
+            try:
+                retry = rebase(manifest) if rebase else None
+                if retry is None:
+                    raise
+            except BaseException:
+                for d in dirs:
+                    storage.delete(spark, d, True)
+                raise
+            manifest, parent = retry
+    _verify_commit_visible(spark, table_path, manifest, dirs)
+    return manifest
+
+
 def _verify_commit_visible(
     spark: SparkSession,
     table_path: str,
     manifest: dict,
-    commit_dir: str | list[str] | None,
+    dirs: list[str] | None,
 ) -> None:
     """Post-publish liveness check (advice r9): a snapshot-pinned write
     whose ``expected_base + 1`` slot was EXPIRED by a vacuum that ran
@@ -382,12 +392,7 @@ def _verify_commit_visible(
     # has no manifest at all (a chained successor would have created
     # it) — so no reader can lose it
     storage.delete(spark, tablelog.manifest_uri(table_path, next_v))
-    dirs = (
-        [] if commit_dir is None
-        else [commit_dir] if isinstance(commit_dir, str)
-        else list(commit_dir)
-    )
-    for d in dirs:
+    for d in dirs or ():
         storage.delete(spark, d, True)
     raise ConcurrentWriteError(
         f"version {next_v} at {table_path} was published into a slot a "
@@ -472,16 +477,15 @@ def _encode_bound(v, typ: str):
 def _file_stats(
     spark: SparkSession,
     files: list[str],
-    stats_cols: list[str],
-    col_types: dict[str, str] | None = None,
-    schema_json: str | None = None,
+    stats_cols: list[str] | None,
+    schema_json: str,
 ) -> dict:
     """Per-file ``{uri: {"n_rows": n, "<col>": [min, max]}}`` read from
     parquet footers (operators/fileindex distributes the footer reads; the
     collect here is manifest-scale — one small row per FILE, never rows of
     data — the same bounded-collect contract the manifest itself is).
-    ``stats_cols`` are LOGICAL names; under a column mapping
-    (``schema_json`` given) the footer lookup uses each column's physical
+    ``stats_cols`` are LOGICAL names of the table schema ``schema_json``;
+    under a column mapping the footer lookup uses each column's physical
     name while the stored stats stay keyed by the logical name — the rest
     of the planner (plan_scan, merge pruning) never sees physical names."""
     if not files or not stats_cols:
@@ -490,11 +494,9 @@ def _file_stats(
         footer_stats,
     )
 
-    col_types = col_types or {}
-    phys = {c: c for c in stats_cols}
-    if schema_json is not None:
-        m = _phys_map(StructType.fromJson(json.loads(schema_json)))
-        phys = {c: m.get(c, c) for c in stats_cols}
+    col_types = _schema_col_types(schema_json)
+    m = physical_names(StructType.fromJson(json.loads(schema_json)))
+    phys = {c: m.get(c, c) for c in stats_cols}
     out: dict = {}
     for r in footer_stats(
         spark,
@@ -649,7 +651,7 @@ def scan_table(
     # delete entries apply after pruning: a delete only removes rows, so
     # stats-based file skipping stays sound, and the residual filter below
     # keeps the result exact either way
-    df = _apply_deletes(
+    df = read_files(
         spark, schema, kept, man.get("deletes", []), births=man.get("births")
     )
     for c, (l, h) in _merged_predicates(col, lo, hi, predicates).items():
@@ -660,25 +662,12 @@ def scan_table(
     return df
 
 
-def _commit_files(spark: SparkSession, commit_dir: str) -> list[str]:
-    """The data files a just-completed write produced under ``commit_dir``.
-
-    The parquet committer always creates the directory (a ``_SUCCESS``
-    marker and at least one part file even for an empty DataFrame), so a
-    listing failure here is a REAL filesystem error and must propagate:
-    round 5 swallowed it into ``new_files = []``, which would publish a
-    manifest without the just-written files — silent data loss reported
-    as success (e.g. optimize_table publishing an empty table as latest).
-    """
-    return sorted(storage.list_parquet_files(spark, commit_dir))
-
-
 def latest_version(spark: SparkSession, table_path: str) -> int | None:
     vs = list_versions(spark, table_path)
     return vs[-1] if vs else None
 
 
-def _ts_to_ms(ts) -> int:
+def ts_to_ms(ts) -> int:
     """Normalize a user timestamp — epoch millis (int/float), an ISO-8601
     string, or a datetime — to epoch millis. Naive strings/datetimes are
     read as UTC (the manifest records epoch ms, which is zone-free; a
@@ -702,15 +691,31 @@ def _ts_to_ms(ts) -> int:
     )
 
 
+def commit_times(
+    spark: SparkSession, table_path: str, versions: list[int] | None = None
+):
+    """Yield ``(version, effective commit ms)`` for the retained
+    ``versions`` (default: all), oldest first, reading each manifest only
+    when the caller asks for it. Wall clocks are not monotonic (two
+    writers, an NTP step, a restart), so the EFFECTIVE timestamp is the
+    running max of ``committed_at_ms`` down the version chain — Delta's
+    adjustment, which guarantees timestamp order never contradicts
+    version order. Manifests published before the field existed count as
+    epoch 0."""
+    eff = 0
+    for v in list_versions(spark, table_path) if versions is None else versions:
+        man = read_manifest(spark, table_path, v)
+        eff = max(eff, int(man.get("committed_at_ms", 0)))
+        yield v, eff
+
+
 def version_as_of_timestamp(spark: SparkSession, table_path: str, ts) -> int:
     """The greatest retained version whose commit timestamp is ``<= ts``
     — Delta's ``TIMESTAMP AS OF`` resolution rule over the
     ``committed_at_ms`` field every publish records.
 
-    Wall clocks are not monotonic (two writers, an NTP step, a restart),
-    so each version's EFFECTIVE timestamp is the running max down the
-    version chain — the same adjustment Delta applies — which guarantees
-    timestamp resolution can never contradict version order. Manifests
+    Versions compare by their EFFECTIVE timestamp (:func:`commit_times`),
+    so resolution can never contradict version order; manifests
     published before the field existed count as epoch 0 (older than any
     real timestamp), so mixed-history tables resolve sensibly: the
     pre-upgrade prefix is reachable only by version pinning.
@@ -719,19 +724,15 @@ def version_as_of_timestamp(spark: SparkSession, table_path: str, ts) -> int:
     data IO. Raises if ``ts`` precedes the first retained commit (the
     version that WAS current then may be vacuumed — answering with a
     later version would silently time-travel forward)."""
-    t = _ts_to_ms(ts)
-    versions = list_versions(spark, table_path)
-    if not versions:
-        raise ValueError(f"no versions published at {table_path}")
+    t = ts_to_ms(ts)
     best: int | None = None
-    eff = 0
-    for v in versions:
-        man = read_manifest(spark, table_path, v)
-        eff = max(eff, int(man.get("committed_at_ms", 0)))
-        if eff <= t:
-            best = v
-        else:
+    eff: int | None = None
+    for v, eff in commit_times(spark, table_path):
+        if eff > t:
             break
+        best = v
+    if eff is None:
+        raise ValueError(f"no versions published at {table_path}")
     if best is None:
         raise ValueError(
             f"timestamp {ts!r} precedes the first retained commit at "
@@ -813,8 +814,8 @@ def versioned_write(
     coalesces explicit counts — useful when the batch is small but the
     layout must still separate cluster keys into distinct files).
 
-    ``delta_min_files`` / ``checkpoint_every`` override the module-level
-    incremental-manifest cadence (``_DELTA_MIN_FILES`` /
+    ``delta_min_files`` / ``checkpoint_every`` override the
+    incremental-manifest cadence (tablelog's ``_DELTA_MIN_FILES`` /
     ``_CHECKPOINT_EVERY``) for THIS commit — the same knob Delta exposes
     as the ``delta.checkpointInterval`` table property. Mixing cadences
     across commits is always SAFE: resolution only ever follows explicit
@@ -826,8 +827,7 @@ def versioned_write(
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     if checkpoint_every is not None and checkpoint_every < 1:
         raise ValueError("checkpoint_every must be >= 1")
-    dmin = _DELTA_MIN_FILES if delta_min_files is None else delta_min_files
-    ckpt_every = _CHECKPOINT_EVERY if checkpoint_every is None else checkpoint_every
+    tablelog.check_extra(extra)  # before any write: a refusal leaves no orphan dir
     if cluster_by:
         missing = [c for c in cluster_by if c not in df.columns]
         if missing:
@@ -845,8 +845,6 @@ def versioned_write(
         # O_EXCL publish below is the conflict detector (a denser history
         # means someone advanced the table after the caller's read)
         base = expected_base
-    prev_files: list[str] = []
-    prev_stats: dict = {}
     schema_json = df.schema.json()
     prev = resolve_manifest(spark, table_path, base) if base is not None else None
     inherited_stats = False
@@ -863,8 +861,6 @@ def versioned_write(
         prev_cons = prev.get("constraints") if prev is not None else None
         constraints_changed = constraints != prev_cons and constraints is not None
     if prev is not None and mode == "append":
-        prev_files = prev["files"]
-        prev_stats = prev.get("stats", {})
         if prev["schema"] != schema_json:
             prev_fields = {
                 f["name"]: f["type"]
@@ -967,135 +963,36 @@ def versioned_write(
             if cluster_files
             else df.repartition(*cols)
         )
-    # files store PHYSICAL names (identity no-op without column mapping)
-    _to_physical(out, schema_json).write.mode("error").parquet(commit_dir)
-    new_files = _commit_files(spark, commit_dir)
-    try:
-        # validate what actually LANDED (exactly-once compute of df);
-        # a changed constraint set re-validates carried files too —
-        # through the MOR delete mask, because the constraint judges what
-        # readers see, not rows already deleted (ADVICE r10 low). New
-        # files carry birth next_v so no carried entry (version <= base)
-        # can mask them in the same pass.
-        revalidate = constraints_changed and mode == "append"
-        _check_constraints(
-            spark,
-            schema_json,
-            (prev_files + new_files) if revalidate else new_files,
-            constraints,
-            deletes=(prev.get("deletes") if revalidate and prev else None),
-            births=(
-                {
-                    **{
-                        f: tablelog.file_birth(prev.get("births"), f)
-                        for f in prev_files
-                    },
-                    **{f: next_v for f in new_files},
-                }
-                if revalidate and prev
-                else None
-            ),
-        )
-    except ValueError:
-        storage.delete(spark, commit_dir, True)  # orphan data, no reader ever saw it
-        raise
-    same_cols = prev is not None and prev.get("stats_cols") == (
-        list(stats_cols) if stats_cols else None
+    # an overwrite starts from nothing; an append builds on prev
+    head = prev if mode == "append" else None
+    new_files = _write_commit(
+        spark, out, commit_dir, schema_json, constraints,
+        # a changed constraint set re-validates carried files too
+        recheck=head if constraints_changed else None,
     )
-    # delta manifest (see the _DELTA_MIN_FILES block): appends to a big
-    # table log only their adds — O(commit), not O(table) metadata. A
-    # stats-column change forces a full manifest (the backfill is a
-    # one-commit upgrade); every _CHECKPOINT_EVERY-th version is full so
-    # resolution chains stay short.
-    is_delta = (
-        mode == "append"
-        and prev is not None
-        and len(prev_files) >= dmin
-        and next_v % ckpt_every != 0
-        and (stats_cols is None or same_cols)
+    manifest = tablelog.build_manifest(
+        head, next_v, mode, head["files"] if head else [], new_files,
+        schema=schema_json,
+        stats_cols=stats_cols,
+        constraints=constraints,
+        stats=_file_stats(spark, new_files, stats_cols, schema_json),
+        fields={
+            "base_version": base,
+            **({"cluster_by": list(cluster_by)} if cluster_by else {}),
+        },
+        delta=True,
+        delta_min_files=delta_min_files,
+        checkpoint_every=checkpoint_every,
     )
-    manifest = {
-        "version": next_v,
-        "op": mode,
-        "base_version": base,
-        "n_files": len(prev_files) + len(new_files),
-        "schema": schema_json,
-        **_lineage(prev),
-    }
-    if is_delta:
-        manifest["delta_of"] = base
-        manifest["adds"] = new_files
-        manifest["removes"] = []
-    else:
-        manifest["files"] = prev_files + new_files
-        # explicit birth map (VERDICT r9 stretch): carried files keep
-        # their recorded birth (path parse backfills pre-upgrade files —
-        # same value the read path would have derived), new files are
-        # born here. Read-path delete scoping prefers this map over the
-        # commit-dir path convention.
-        manifest["births"] = {
-            **{
-                f: tablelog.file_birth(prev.get("births") if prev else None, f)
-                for f in prev_files
-            },
-            **{f: next_v for f in new_files},
-        }
-        # carry merge-on-read delete entries on APPEND (they mask rows of
-        # carried files; dropping them would resurrect deleted rows). An
-        # overwrite replaces the content wholesale — nothing to mask.
-        if mode == "append" and prev is not None and prev.get("deletes"):
-            manifest["deletes"] = prev["deletes"]
-    if mode == "append" and prev is not None and prev.get("dropped_cols"):
-        # column-mapping bookkeeping survives every append (delta or full)
-        manifest["dropped_cols"] = prev["dropped_cols"]
-    if cluster_by:
-        manifest["cluster_by"] = list(cluster_by)
-    if constraints:
-        # recorded on EVERY manifest form (like stats_cols on deltas) so
-        # inheritance never needs more than the previous manifest
-        manifest["constraints"] = list(constraints)
-    if stats_cols:
-        manifest["stats_cols"] = list(stats_cols)
-        new_stats = _file_stats(
-            spark, new_files, stats_cols, _schema_col_types(schema_json),
-            schema_json=schema_json,
+    if "stats" in manifest:
+        # a full manifest backfills carried files without stats: enabling
+        # stats on an existing table, or a column-set change, is a
+        # one-commit upgrade
+        missing = [f for f in manifest["files"] if f not in manifest["stats"]]
+        manifest["stats"].update(
+            _file_stats(spark, missing, stats_cols, schema_json)
         )
-        if is_delta:
-            manifest["stats_adds"] = new_stats
-        else:
-            # reuse carried files' entries when the column set is
-            # unchanged; backfill anything missing (enabling stats on an
-            # existing table, or a column-set change, is a one-commit
-            # upgrade)
-            carried = (
-                {f: prev_stats[f] for f in prev_files if f in prev_stats}
-                if same_cols
-                else {}
-            )
-            to_compute = [f for f in prev_files if f not in carried]
-            manifest["stats"] = {
-                **carried,
-                **_file_stats(
-                    spark, to_compute, stats_cols,
-                    _schema_col_types(schema_json),
-                    schema_json=schema_json,
-                ),
-                **new_stats,
-            }
-    if extra:
-        reserved = _RESERVED_MANIFEST_KEYS & set(extra)
-        if reserved:
-            raise ValueError(
-                f"extra metadata shadows reserved manifest keys: {sorted(reserved)}"
-            )
-        manifest.update(extra)
-    try:
-        _publish(spark, table_path, manifest)
-    except ConcurrentWriteError:
-        storage.delete(spark, commit_dir, True)  # orphan data, no reader ever saw it
-        raise
-    _verify_commit_visible(spark, table_path, manifest, commit_dir)
-    return manifest
+    return _commit(spark, table_path, manifest, prev, [commit_dir], extra)
 
 
 def write_with_retry(
@@ -1218,175 +1115,80 @@ def optimize_table(
         tablelog.file_birth(births, f) < max_entry for f in carry
     )
     schema = StructType.fromJson(json.loads(schema_json))
-    df = _apply_deletes(spark, schema, rewrite, deletes, births=births)
-    next_v = base + 1
-    commit_dir = tablelog.new_commit_dir(table_path, next_v)
+    df = read_files(spark, schema, rewrite, deletes, births=births)
+    commit_dir = tablelog.new_commit_dir(table_path, base + 1)
+    write = None
     if zorder_cols:
         from procurement_data_pipeline_spark.catalog import z_order_write
 
-        # z-order on the PHYSICAL frame (what lands on disk), with the
+        # z-order the PHYSICAL frame (what lands on disk), with the
         # cluster columns translated through the mapping
-        zphys = _phys_map(schema)
-        z_order_write(
-            _to_physical(df, schema_json),
-            commit_dir,
-            [zphys.get(c, c) for c in zorder_cols],
-            num_files=target_files,
-            mode="overwrite",
-            bucket_mode=bucket_mode,
-        )
-    else:
-        out = df.coalesce(target_files) if target_files else df
-        _to_physical(out, schema_json).write.mode("error").parquet(
-            commit_dir
-        )
-    new_files = _commit_files(spark, commit_dir)
-    manifest = {
-        "version": next_v,
-        "op": "optimize",
-        "base_version": base,
-        "files": carry + new_files,
-        "n_files": len(carry) + len(new_files),
-        "births": {
-            **{f: tablelog.file_birth(births, f) for f in carry},
-            **{f: next_v for f in new_files},
-        },
-        "schema": schema_json,
-        "zorder_cols": zorder_cols or [],
-        "optimize_scope": scope,
-        **_lineage(man),
-    }
-    if keep_deletes:
-        manifest["deletes"] = deletes
-    if man.get("constraints"):  # content-identical → still valid
-        manifest["constraints"] = man["constraints"]
-    if man.get("dropped_cols"):
-        manifest["dropped_cols"] = man["dropped_cols"]
-    stats_cols = man.get("stats_cols")
-    if stats_cols:
-        prev_stats = man.get("stats", {})
-        manifest["stats_cols"] = stats_cols
-        manifest["stats"] = {
-            **{f: prev_stats[f] for f in carry if f in prev_stats},
-            **_file_stats(
-                spark, new_files, stats_cols, _schema_col_types(schema_json),
-                schema_json=schema_json,
+        zphys = physical_names(schema)
+
+        def write(out: DataFrame, path: str) -> None:
+            z_order_write(
+                out,
+                path,
+                [zphys.get(c, c) for c in zorder_cols],
+                num_files=target_files,
+                mode="overwrite",
+                bucket_mode=bucket_mode,
+            )
+    elif target_files:
+        df = df.coalesce(target_files)
+    new_files = _write_commit(spark, df, commit_dir, schema_json, write=write)
+
+    def build(head: dict, carried: list[str]) -> dict:
+        return tablelog.build_manifest(
+            head, head["version"] + 1, "optimize", carried, new_files,
+            deletes=deletes if keep_deletes else [],
+            stats=_file_stats(
+                spark, new_files, head.get("stats_cols"), head["schema"]
             ),
-        }
+            fields={"zorder_cols": zorder_cols or [], "optimize_scope": scope},
+        )
+
     # OCC rebase on conflict (VERDICT r10 item 6 — Delta's commit
     # reconciliation): losing the publish to interleaved PURE APPENDS
-    # must not waste a long compaction. Re-read the new head, verify
-    # every interleaved commit only ADDED files (append data is disjoint
-    # from the rewritten set by construction — appends never touch
-    # existing files or delete entries), carry those adds into the
-    # manifest (with their births/stats from the head manifest, and the
-    # head's possibly-widened schema/constraints), and republish at
+    # must not waste a long compaction. Every interleaved commit must
+    # only ADD files (append data is disjoint from the rewritten set by
+    # construction — appends never touch existing files or delete
+    # entries); their adds carry into a manifest rebuilt on the new head
+    # (whose schema may have WIDENED — rewritten files read the new
+    # columns back as NULL, content identical) and republished at
     # head+1. Any non-append interleaver (merge, overwrite, rollback,
     # another optimize, a schema op) aborts instead: its effect on the
     # rewritten rows cannot be replayed, so the rewrite is discarded and
     # the conflict propagates — correctness first. Interleaved appends
     # are NOT z-ordered by this commit (they arrived after the plan); the
     # next optimize picks them up, same as Delta.
-    published = False
-    rebase_adds: list[str] = []  # accumulates across conflict rounds
-    for _ in range(8):
-        try:
-            _publish(spark, table_path, manifest)
-            published = True
-            break
-        except ConcurrentWriteError:
-            target_v = manifest["version"]
-            head = latest_version(spark, table_path)
-            ok = head is not None and head >= target_v
-            extra_adds: list[str] = []
-            if ok:
-                # walk the interleaved commits; every one must be a pure
-                # append (delta adds, or a full manifest that only grew)
-                base_files = set(
-                    resolve_manifest(spark, table_path, target_v - 1)[
-                        "files"
-                    ]
-                )
-                for v in range(target_v, head + 1):
-                    raw = read_manifest(spark, table_path, v)
-                    if raw.get("op") != "append" or raw.get("deletes_adds"):
-                        ok = False
-                        break
-                    if "delta_of" in raw:
-                        if raw.get("removes"):
-                            ok = False
-                            break
-                        extra_adds.extend(raw["adds"])
-                        base_files.update(raw["adds"])
-                    else:
-                        cur = set(raw["files"])
-                        if not base_files <= cur:
-                            ok = False  # something was removed: not append
-                            break
-                        adds = [
-                            f for f in raw["files"] if f not in base_files
-                        ]
-                        extra_adds.extend(adds)
-                        base_files = cur
-            if not ok:
-                storage.delete(spark, commit_dir, True)
-                raise
-            rebase_adds.extend(extra_adds)
-            head_raw = read_manifest(spark, table_path, head)
-            head_man = resolve_manifest(spark, table_path, head)
-            new_v2 = head + 1
-            manifest["version"] = new_v2
-            manifest["base_version"] = head
-            manifest["files"] = carry + new_files + rebase_adds
-            manifest["n_files"] = len(manifest["files"])
-            manifest["births"] = {
-                **{f: tablelog.file_birth(births, f) for f in carry},
-                **{f: new_v2 for f in new_files},
-                **{
-                    f: tablelog.file_birth(head_man.get("births"), f)
-                    for f in rebase_adds
-                },
-            }
-            # the head's schema may have WIDENED (merge_schema appends);
-            # rewritten files read the new columns back as NULL through
-            # the pinned schema — content identical either way
-            manifest["schema"] = head_man["schema"]
-            manifest.update(_lineage(head_raw))
-            for k in ("constraints", "dropped_cols"):
-                if head_man.get(k):
-                    manifest[k] = head_man[k]
-                else:
-                    manifest.pop(k, None)
-            head_sc = head_man.get("stats_cols")
-            if head_sc:
-                head_stats = head_man.get("stats", {})
-                manifest["stats_cols"] = head_sc
-                manifest["stats"] = {
-                    **{
-                        f: head_stats[f]
-                        for f in carry + rebase_adds
-                        if f in head_stats
-                    },
-                    **_file_stats(
-                        spark,
-                        new_files,
-                        head_sc,
-                        _schema_col_types(head_man["schema"]),
-                        schema_json=head_man["schema"],
-                    ),
-                }
-            else:
-                manifest.pop("stats_cols", None)
-                manifest.pop("stats", None)
-    if not published:
-        storage.delete(spark, commit_dir, True)
-        raise ConcurrentWriteError(
-            f"optimize at {table_path} lost the publish 8 times in a row "
-            "— writer volume too high for a maintenance rebase; retry in "
-            "a quieter window"
-        )
-    _verify_commit_visible(spark, table_path, manifest, commit_dir)
-    return manifest
+    head = man
+    rebase_adds: list[str] = []
+    tries = iter(range(7))  # at most 8 publishes
+
+    def rebase(lost: dict) -> tuple[dict, dict] | None:
+        nonlocal head
+        if next(tries, None) is None:
+            raise ConcurrentWriteError(
+                f"optimize at {table_path} lost the publish 8 times in a "
+                "row — writer volume too high for a maintenance rebase; "
+                "retry in a quieter window"
+            )
+        latest = latest_version(spark, table_path)
+        if latest is None or latest < lost["version"]:
+            return None
+        for v in range(lost["version"], latest + 1):
+            raw = read_manifest(spark, table_path, v)
+            adds, removes, entries = tablelog.changes(raw, head)
+            if raw.get("op") != "append" or removes or entries:
+                return None
+            rebase_adds.extend(adds)
+            head = tablelog.fold(head, raw) if "delta_of" in raw else raw
+        return build(head, carry + rebase_adds), head
+
+    return _commit(
+        spark, table_path, build(man, carry), man, [commit_dir], rebase=rebase
+    )
 
 
 def read_table(
@@ -1414,7 +1216,7 @@ def read_table(
     # written before a column existed read it back as NULL (and every
     # version reads with ITS OWN schema — time travel sees old shapes).
     # Merge-on-read delete entries, when present, anti-join out here.
-    return _apply_deletes(
+    return read_files(
         spark, schema, man["files"], man.get("deletes", []),
         births=man.get("births"),
     )
@@ -1443,98 +1245,42 @@ def _merge_on_read(
     # records the physical key names (descriptive of its files — the read
     # path aliases them back through the CURRENT mapping, so entries
     # follow later renames without rewrite)
-    phys = _phys_map(StructType.fromJson(json.loads(man["schema"])))
-    pkey_cols = [phys.get(k, k) for k in key_cols]
-    _to_physical(
-        updates.select(*key_cols).distinct(), man["schema"]
-    ).write.mode("error").parquet(del_dir)
-    del_files = _commit_files(spark, del_dir)
+    phys = physical_names(StructType.fromJson(json.loads(man["schema"])))
     new_files: list[str] = []
     if when_matched == "update":
-        _to_physical(updates, man["schema"]).write.mode("error").parquet(
-            commit_dir
+        new_files = _write_commit(
+            spark, updates, commit_dir, man["schema"], man.get("constraints")
         )
-        new_files = _commit_files(spark, commit_dir)
-        try:
-            _check_constraints(
-                spark, man["schema"], new_files, man.get("constraints")
-            )
-        except ValueError:
-            for d in (del_dir, commit_dir):
-                storage.delete(spark, d, True)
-            raise
     entry = {
         "version": next_v,
-        "key_cols": pkey_cols,
-        "files": del_files,
+        "key_cols": [phys.get(k, k) for k in key_cols],
+        "files": _write_commit(
+            spark, updates.select(*key_cols).distinct(), del_dir, man["schema"]
+        ),
         "n_keys": n_keys,
     }
-    is_delta = (
-        len(man["files"]) >= _DELTA_MIN_FILES
-        and next_v % _CHECKPOINT_EVERY != 0
-    )
-    manifest = {
-        "version": next_v,
-        "op": "merge",
-        "base_version": base,
-        "n_files": len(man["files"]) + len(new_files),
-        "schema": man["schema"],
-        **_lineage(man),
-        **(
-            {"dropped_cols": man["dropped_cols"]}
-            if man.get("dropped_cols")
-            else {}
-        ),
-        "merge": {
-            "when_matched": when_matched,
-            "key_cols": list(key_cols),
-            # a source-scoped predicate was already applied to the updates
-            # (merge_into pre-filters); recorded here for the audit trail
-            "condition": source_condition,
-            **({"condition_scope": "source"} if source_condition else {}),
-            "strategy": "merge-on-read",
-            "n_keys": n_keys,
-            "files_rewritten": 0,
-            "files_untouched": len(man["files"]),
-            "delete_files": len(del_files),
+    manifest = tablelog.build_manifest(
+        man, next_v, "merge", man["files"], new_files,
+        deletes_adds=[entry],
+        stats=_file_stats(spark, new_files, man.get("stats_cols"), man["schema"]),
+        fields={
+            "merge": {
+                "when_matched": when_matched,
+                "key_cols": list(key_cols),
+                # a source-scoped predicate was already applied to the
+                # updates (merge_into pre-filters); recorded for the audit
+                "condition": source_condition,
+                **({"condition_scope": "source"} if source_condition else {}),
+                "strategy": "merge-on-read",
+                "n_keys": n_keys,
+                "files_rewritten": 0,
+                "files_untouched": len(man["files"]),
+                "delete_files": len(entry["files"]),
+            },
         },
-    }
-    if is_delta:
-        manifest["delta_of"] = base
-        manifest["adds"] = new_files
-        manifest["removes"] = []
-        manifest["deletes_adds"] = [entry]
-    else:
-        manifest["files"] = man["files"] + new_files
-        manifest["births"] = {
-            **{f: tablelog.file_birth(man.get("births"), f) for f in man["files"]},
-            **{f: next_v for f in new_files},
-        }
-        manifest["deletes"] = list(man.get("deletes", [])) + [entry]
-    if man.get("constraints"):
-        manifest["constraints"] = man["constraints"]
-    if man.get("stats_cols"):
-        manifest["stats_cols"] = man["stats_cols"]
-        new_stats = _file_stats(
-            spark, new_files, man["stats_cols"],
-            _schema_col_types(man["schema"]), schema_json=man["schema"],
-        )
-        if is_delta:
-            manifest["stats_adds"] = new_stats
-        else:
-            prev_stats = man.get("stats", {})
-            manifest["stats"] = {
-                **{f: prev_stats[f] for f in man["files"] if f in prev_stats},
-                **new_stats,
-            }
-    try:
-        _publish(spark, table_path, manifest)
-    except ConcurrentWriteError:
-        for d in (del_dir, commit_dir):
-            storage.delete(spark, d, True)
-        raise
-    _verify_commit_visible(spark, table_path, manifest, [del_dir, commit_dir])
-    return manifest
+        delta=True,
+    )
+    return _commit(spark, table_path, manifest, man, [del_dir, commit_dir])
 
 
 # source/target alias reference inside an update_set expression:
@@ -1872,7 +1618,7 @@ def merge_into(
     if key_kind and man["files"]:
         # footers store PHYSICAL names; the pruning key maps through the
         # table's column mapping (identity without one)
-        pkey = _phys_map(StructType.fromJson(json.loads(man["schema"]))).get(
+        pkey = physical_names(StructType.fromJson(json.loads(man["schema"]))).get(
             first_key, first_key
         )
         stats = footer_stats(
@@ -1922,7 +1668,7 @@ def merge_into(
         # touched files read through any live merge-on-read delete entries
         # (a raw read would resurrect masked rows INTO the rewrite, whose
         # fresh birth version escapes the entries)
-        old = _apply_deletes(
+        old = read_files(
             spark, pinned, touched, man.get("deletes", []),
             births=man.get("births"),
         )
@@ -2039,87 +1785,32 @@ def merge_into(
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        _to_physical(out, man["schema"]).write.mode("error").parquet(
-            commit_dir
+        # rewritten rows re-validate too — they were valid at their own
+        # write time, and a merge can only keep or replace them with
+        # update values, which is exactly what needs checking
+        new_files = _write_commit(
+            spark, out, commit_dir, man["schema"], man.get("constraints")
         )
-        new_files = _commit_files(spark, commit_dir)
-        try:
-            # rewritten rows re-validate too — they were valid at their
-            # own write time, and a merge can only keep or replace them
-            # with update values, which is exactly what needs checking
-            _check_constraints(
-                spark, man["schema"], new_files, man.get("constraints")
-            )
-        except ValueError:
-            storage.delete(spark, commit_dir, True)
-            raise
-    # delta manifest on big tables: log only the rewritten files as
-    # removes + the rewrite output as adds — a MERGE touching k files
-    # costs O(k) metadata, never O(table) (see the _DELTA_MIN_FILES block)
-    is_delta = (
-        len(man["files"]) >= _DELTA_MIN_FILES
-        and next_v % _CHECKPOINT_EVERY != 0
-    )
-    manifest = {
-        "version": next_v,
-        "op": "merge",
-        "base_version": base,
-        "n_files": len(untouched) + len(new_files),
-        "schema": man["schema"],
-        **_lineage(man),
-        **(
-            {"dropped_cols": man["dropped_cols"]}
-            if man.get("dropped_cols")
-            else {}
-        ),
-        "merge": {
-            "when_matched": when_matched,
-            "key_cols": key_cols,
-            "condition": when_matched_condition or source_condition,
-            **({"condition_scope": "source"} if source_condition else {}),
-            "n_keys": int(n_keys),
-            "files_rewritten": len(touched),
-            "files_untouched": len(untouched),
-            **({"update_set": dict(update_set)} if update_set else {}),
+    # live delete entries still mask the UNTOUCHED files' rows; the
+    # rewritten files' fresh birth version escapes them by design
+    manifest = tablelog.build_manifest(
+        man, next_v, "merge", untouched, new_files,
+        stats=_file_stats(spark, new_files, man.get("stats_cols"), man["schema"]),
+        fields={
+            "merge": {
+                "when_matched": when_matched,
+                "key_cols": key_cols,
+                "condition": when_matched_condition or source_condition,
+                **({"condition_scope": "source"} if source_condition else {}),
+                "n_keys": int(n_keys),
+                "files_rewritten": len(touched),
+                "files_untouched": len(untouched),
+                **({"update_set": dict(update_set)} if update_set else {}),
+            },
         },
-    }
-    if is_delta:
-        manifest["delta_of"] = base
-        manifest["adds"] = new_files
-        manifest["removes"] = list(touched)
-    else:
-        manifest["files"] = untouched + new_files
-        manifest["births"] = {
-            **{f: tablelog.file_birth(man.get("births"), f) for f in untouched},
-            **{f: next_v for f in new_files},
-        }
-        # live delete entries still mask the UNTOUCHED files' rows; the
-        # rewritten files' fresh birth version escapes them by design
-        if man.get("deletes"):
-            manifest["deletes"] = man["deletes"]
-    if man.get("constraints"):
-        manifest["constraints"] = man["constraints"]
-    if man.get("stats_cols"):
-        prev_stats = man.get("stats", {})
-        manifest["stats_cols"] = man["stats_cols"]
-        new_stats = _file_stats(
-            spark, new_files, man["stats_cols"],
-            _schema_col_types(man["schema"]), schema_json=man["schema"],
-        )
-        if is_delta:
-            manifest["stats_adds"] = new_stats
-        else:
-            manifest["stats"] = {
-                **{f: prev_stats[f] for f in untouched if f in prev_stats},
-                **new_stats,
-            }
-    try:
-        _publish(spark, table_path, manifest)
-    except ConcurrentWriteError:
-        storage.delete(spark, commit_dir, True)
-        raise
-    _verify_commit_visible(spark, table_path, manifest, commit_dir)
-    return manifest
+        delta=True,
+    )
+    return _commit(spark, table_path, manifest, man, [commit_dir])
 
 
 def rollback(
@@ -2141,35 +1832,16 @@ def rollback(
         raise ValueError("rollback needs to_version or timestamp")
     target = resolve_manifest(spark, table_path, to_version)
     base = latest_version(spark, table_path)
-    manifest = {
-        "version": base + 1,
-        "op": "rollback",
-        "base_version": to_version,
-        "files": target["files"],
-        "n_files": len(target["files"]),
-        # identical files → identical birth versions (path parse
-        # backfills targets that predate the explicit map)
-        "births": {
-            f: tablelog.file_birth(target.get("births"), f) for f in target["files"]
-        },
-        "schema": target["schema"],
-        # lineage parent is the LATEST observed (the commit-chain parent),
-        # not to_version — base_version records the rollback target for
-        # the audit view, base_commit_id records what this commit sits on
-        **_lineage(read_manifest(spark, table_path, base)),
-    }
-    if target.get("stats_cols"):  # identical files → identical stats
-        manifest["stats_cols"] = target["stats_cols"]
-        manifest["stats"] = target.get("stats", {})
-    if target.get("deletes"):  # identical content → identical masking
-        manifest["deletes"] = target["deletes"]
-    if target.get("constraints"):
-        manifest["constraints"] = target["constraints"]
-    if target.get("dropped_cols"):
-        manifest["dropped_cols"] = target["dropped_cols"]
-    _publish(spark, table_path, manifest)
-    _verify_commit_visible(spark, table_path, manifest, None)
-    return manifest
+    # identical files → identical births, stats, delete masking; the
+    # lineage parent is the LATEST observed (the commit-chain parent), not
+    # to_version — base_version records the rollback target for the audit
+    # view, base_commit_id records what this commit sits on
+    manifest = tablelog.build_manifest(
+        target, base + 1, "rollback", target["files"]
+    )
+    return _commit(
+        spark, table_path, manifest, read_manifest(spark, table_path, base)
+    )
 
 
 # a bare identifier reference inside a constraint expression — backtick-
@@ -2220,38 +1892,19 @@ def rename_column(
             md.setdefault("physical", old)  # pin the on-disk name
             f["metadata"] = md
             f["name"] = new
-    manifest = {
-        "version": base + 1,
-        "op": "rename_column",
-        "base_version": base,
-        "files": man["files"],
-        "n_files": len(man["files"]),
-        "births": {
-            f: tablelog.file_birth(man.get("births"), f) for f in man["files"]
-        },
-        "schema": json.dumps(schema),
-        **_lineage(man),
-    }
-    if man.get("deletes"):
-        manifest["deletes"] = man["deletes"]
-    if man.get("constraints"):
-        manifest["constraints"] = man["constraints"]
-    if man.get("dropped_cols"):
-        manifest["dropped_cols"] = man["dropped_cols"]
-    if man.get("stats_cols"):
-        manifest["stats_cols"] = [
-            new if c == old else c for c in man["stats_cols"]
-        ]
-        manifest["stats"] = {
+    manifest = tablelog.build_manifest(
+        man, base + 1, "rename_column", man["files"],
+        schema=json.dumps(schema),
+        stats_cols=[new if c == old else c for c in man.get("stats_cols", [])],
+        stats={
             fl: {
-                ("n_rows" if k == "n_rows" else (new if k == old else k)): v
+                (new if k == old and k != "n_rows" else k): v
                 for k, v in ent.items()
             }
             for fl, ent in man.get("stats", {}).items()
-        }
-    _publish(spark, table_path, manifest)
-    _verify_commit_visible(spark, table_path, manifest, None)
-    return manifest
+        },
+    )
+    return _commit(spark, table_path, manifest, man)
 
 
 def drop_column(spark: SparkSession, table_path: str, name: str) -> dict:
@@ -2291,36 +1944,19 @@ def drop_column(spark: SparkSession, table_path: str, name: str) -> dict:
                 "first"
             )
     schema["fields"] = [f for f in fields if f["name"] != name]
-    manifest = {
-        "version": base + 1,
-        "op": "drop_column",
-        "base_version": base,
-        "files": man["files"],
-        "n_files": len(man["files"]),
-        "births": {
-            f: tablelog.file_birth(man.get("births"), f) for f in man["files"]
+    manifest = tablelog.build_manifest(
+        man, base + 1, "drop_column", man["files"],
+        schema=json.dumps(schema),
+        stats_cols=[c for c in man.get("stats_cols", []) if c != name],
+        stats={
+            fl: {k: v for k, v in ent.items() if k != name}
+            for fl, ent in man.get("stats", {}).items()
         },
-        "schema": json.dumps(schema),
-        "dropped_cols": sorted(
-            set(man.get("dropped_cols", [])) | {physical}
-        ),
-        **_lineage(man),
-    }
-    if man.get("deletes"):
-        manifest["deletes"] = man["deletes"]
-    if man.get("constraints"):
-        manifest["constraints"] = man["constraints"]
-    if man.get("stats_cols"):
-        kept = [c for c in man["stats_cols"] if c != name]
-        if kept:
-            manifest["stats_cols"] = kept
-            manifest["stats"] = {
-                fl: {k: v for k, v in ent.items() if k != name}
-                for fl, ent in man.get("stats", {}).items()
-            }
-    _publish(spark, table_path, manifest)
-    _verify_commit_visible(spark, table_path, manifest, None)
-    return manifest
+        fields={
+            "dropped_cols": sorted(set(man.get("dropped_cols", [])) | {physical})
+        },
+    )
+    return _commit(spark, table_path, manifest, man)
 
 
 def register_versioned_view(
@@ -2389,71 +2025,43 @@ def clone_table(
         if version is None:
             raise ValueError(f"no versions published at {src_path}")
     man = resolve_manifest(spark, src_path, version)
-    manifest: dict = {
-        # shallow clones publish at the SOURCE version so carried
-        # births/delete-entry versions stay in-domain (see docstring);
-        # deep clones materialize content with fresh births at 1
-        "version": 1 if deep else version,
-        "op": "clone",
+    fields = {
         "base_version": None,
-        "schema": man["schema"],
         "clone_src": src_path,
         "clone_src_version": version,
-        **_lineage(None),
     }
-    if man.get("constraints"):  # the clone keeps enforcing them
-        manifest["constraints"] = man["constraints"]
-    deletes = [dict(d) for d in man.get("deletes", [])]
     if not deep:
-        manifest["files"] = list(man["files"])
-        manifest["births"] = {
-            f: tablelog.file_birth(man.get("births"), f) for f in man["files"]
-        }
-        # delete entries keep their own versions: scoping at dst replays
-        # exactly the source's (births carried unchanged)
-        if deletes:
-            manifest["deletes"] = deletes
-        if man.get("stats_cols"):
-            manifest["stats_cols"] = man["stats_cols"]
-            manifest["stats"] = dict(man.get("stats", {}))
-        if man.get("dropped_cols"):  # column-mapping bookkeeping carries
-            manifest["dropped_cols"] = man["dropped_cols"]
-    else:
-        # deep clone materializes CONTENT under logical names — the
-        # column mapping (physical pins + dropped_cols) does not carry,
-        # because the fresh files are written with the logical schema
-        stripped = json.loads(man["schema"])
-        for fld in stripped["fields"]:
-            md = dict(fld.get("metadata") or {})
-            if md.pop("physical", None) is not None:
-                fld["metadata"] = md
-        manifest["schema"] = json.dumps(stripped)
-        commit_dir = tablelog.new_commit_dir(dst_path, 1)
-        schema = StructType.fromJson(json.loads(man["schema"]))
-        df = _apply_deletes(
-            spark, schema, man["files"], deletes, births=man.get("births")
+        # published at the SOURCE version so carried births/delete-entry
+        # versions stay in-domain (see docstring); delete entries keep
+        # their own versions, so scoping at dst replays the source's
+        manifest = tablelog.build_manifest(
+            man, version, "clone", man["files"], fields=fields
         )
-        df.write.mode("error").parquet(commit_dir)
-        new_files = _commit_files(spark, commit_dir)
-        manifest["files"] = new_files
-        manifest["births"] = {f: 1 for f in new_files}
-        if man.get("stats_cols"):
-            manifest["stats_cols"] = man["stats_cols"]
-            manifest["stats"] = _file_stats(
-                spark,
-                new_files,
-                man["stats_cols"],
-                _schema_col_types(man["schema"]),
-                # deep clone writes LOGICAL names (mapping stripped below)
-            )
-    manifest["n_files"] = len(manifest["files"])
-    try:
-        _publish(spark, dst_path, manifest)
-    except ConcurrentWriteError:
-        if deep:
-            storage.delete(spark, commit_dir, True)
-        raise
-    return manifest
+        return _commit(spark, dst_path, manifest, None)
+    # deep clone materializes CONTENT under logical names — the column
+    # mapping (physical pins + dropped_cols) does not carry, because the
+    # fresh files are written with the logical schema
+    stripped = json.loads(man["schema"])
+    for fld in stripped["fields"]:
+        md = dict(fld.get("metadata") or {})
+        if md.pop("physical", None) is not None:
+            fld["metadata"] = md
+    schema_json = json.dumps(stripped)
+    commit_dir = tablelog.new_commit_dir(dst_path, 1)
+    df = read_files(
+        spark, StructType.fromJson(json.loads(man["schema"])), man["files"],
+        man.get("deletes", []), births=man.get("births"),
+    )
+    new_files = _write_commit(spark, df, commit_dir, schema_json)
+    manifest = tablelog.build_manifest(
+        None, 1, "clone", [], new_files,
+        schema=schema_json,
+        stats_cols=man.get("stats_cols"),
+        constraints=man.get("constraints"),
+        stats=_file_stats(spark, new_files, man.get("stats_cols"), schema_json),
+        fields=fields,
+    )
+    return _commit(spark, dst_path, manifest, None, [commit_dir])
 
 
 def describe_deletes(
@@ -2562,27 +2170,10 @@ def consolidate_deletes(spark: SparkSession, table_path: str) -> dict:
     merged.append(run)
     if len(merged) == len(entries):
         return man  # nothing adjacent-and-safe to merge
-    manifest = {
-        "version": base + 1,
-        "op": "consolidate_deletes",
-        "base_version": base,
-        "files": man["files"],
-        "n_files": len(man["files"]),
-        "births": {
-            f: tablelog.file_birth(man.get("births"), f) for f in man["files"]
-        },
-        "schema": man["schema"],
-        "deletes": merged,
-        **_lineage(man),
-    }
-    for k in ("constraints", "dropped_cols", "stats_cols"):
-        if man.get(k):
-            manifest[k] = man[k]
-    if man.get("stats_cols"):
-        manifest["stats"] = dict(man.get("stats", {}))
-    _publish(spark, table_path, manifest)
-    _verify_commit_visible(spark, table_path, manifest, None)
-    return manifest
+    manifest = tablelog.build_manifest(
+        man, base + 1, "consolidate_deletes", man["files"], deletes=merged
+    )
+    return _commit(spark, table_path, manifest, man)
 
 
 def history(spark: SparkSession, table_path: str) -> list[dict]:
@@ -2648,17 +2239,8 @@ def vacuum(
         if retain_hours < 0:
             raise ValueError("retain_hours must be >= 0")
         horizon = _now_ms() - retain_hours * 3_600_000
-        eff = 0
         oldest_keep_idx = len(versions)
-        for i, v in enumerate(versions):
-            eff = max(
-                eff,
-                int(
-                    read_manifest(spark, table_path, v).get(
-                        "committed_at_ms", 0
-                    )
-                ),
-            )
+        for i, (_, eff) in enumerate(commit_times(spark, table_path, versions)):
             if eff >= horizon:
                 oldest_keep_idx = i  # suffix start: all later are younger
                 break
@@ -2758,6 +2340,10 @@ __all__ = [
     "clone_table",
     "register_versioned_view",
     "latest_version",
+    "read_files",
+    "physical_names",
+    "ts_to_ms",
+    "commit_times",
     "version_as_of_timestamp",
     "vacuum",
 ]

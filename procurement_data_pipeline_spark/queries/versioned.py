@@ -44,11 +44,14 @@ from procurement_data_pipeline_spark import storage
 from procurement_data_pipeline_spark.operators import tablelog
 from procurement_data_pipeline_spark.operators.cdf import table_changes
 from procurement_data_pipeline_spark.operators.versioning import (
+    clone_table,
+    consolidate_deletes,
     describe_deletes,
     merge_into,
     optimize_table,
     read_manifest,
     read_table,
+    rename_column,
     resolve_manifest,
     scan_table,
     vacuum,
@@ -328,7 +331,7 @@ def versioned_clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Incremental (delta) manifest fixture — oracle-hash evidence for the
-# round-7 metadata-scaling path (operators/versioning.py _DELTA_MIN_FILES
+# round-7 metadata-scaling path (operators/tablelog.py _DELTA_MIN_FILES
 # block). The shared fixture above never crosses the 64-file delta
 # threshold, so until round 8 delta resolution rode on pytest alone; this
 # fixture pins the threshold low (the versioned_write parameter — the
@@ -783,10 +786,6 @@ _RN: dict[str, str] = {}
 
 
 def _renamed_fixture(spark: SparkSession, sf_dir: str) -> str:
-    from procurement_data_pipeline_spark.operators.versioning import (
-        rename_column,
-    )
-
     key = os.path.abspath(sf_dir)
     if key in _RN:
         return _RN[key]
@@ -889,12 +888,6 @@ def versioned_consolidated_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     entries (2 → 1, metadata only), and read: the relation must equal
     versioned_mor_delete's byte-for-byte — reads pay ONE anti-join where
     they paid two, with identical results."""
-    from procurement_data_pipeline_spark.operators.versioning import (
-        clone_table,
-        consolidate_deletes,
-        describe_deletes,
-    )
-
     src = _mor_fixture(spark, sf_dir)
     key = os.path.abspath(sf_dir)
     if key not in _CONS:
@@ -944,10 +937,6 @@ def versioned_clone_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest references the source's data files with the delete entries
     and birth map carried, so masking and rebirth scoping replay exactly
     — zero data was copied to make this table."""
-    from procurement_data_pipeline_spark.operators.versioning import (
-        clone_table,
-    )
-
     src = _mor_fixture(spark, sf_dir)
     key = os.path.abspath(sf_dir)
     if key not in _CLONES:

@@ -322,22 +322,8 @@ class VersionedCDFStreamReader(DataSourceStreamReader):
             if op == "clone":
                 # a clone commit inside the range = branch point snapshot
                 return self._snapshot_parts(v)
-            if "delta_of" in raw:
-                adds = list(raw.get("adds", []))
-                entries = list(raw.get("deletes_adds", []))
-            else:
-                prev = self._log.resolve(v - 1)
-                prev_files = set(prev["files"])
-                adds = [f for f in raw["files"] if f not in prev_files]
-                prev_entries = {
-                    json.dumps(d, sort_keys=True)
-                    for d in prev.get("deletes", [])
-                }
-                entries = [
-                    d
-                    for d in raw.get("deletes", [])
-                    if json.dumps(d, sort_keys=True) not in prev_entries
-                ]
+            prev = None if "delta_of" in raw else self._log.resolve(v - 1)
+            adds, _, entries = tablelog.changes(raw, prev)
             parts = [
                 _CDFPart(
                     file=kf, change_type="delete", version=v, ts_ms=ts,

@@ -73,10 +73,11 @@ def test_delta_manifest_fast_path_reads_only_adds(spark, tmp_path, monkeypatch):
     full file-list diff (and still never a join in the plan). A range
     crossing a MERGE delta (non-empty removes) falls back to the keyed
     diff and stays exact."""
+    from procurement_data_pipeline_spark.operators import tablelog
     from procurement_data_pipeline_spark.operators import versioning as V
 
-    monkeypatch.setattr(V, "_DELTA_MIN_FILES", 0)
-    monkeypatch.setattr(V, "_CHECKPOINT_EVERY", 100)  # no full checkpoints
+    monkeypatch.setattr(tablelog, "_DELTA_MIN_FILES", 0)
+    monkeypatch.setattr(tablelog, "_CHECKPOINT_EVERY", 100)  # no full checkpoints
     t = str(tmp_path / "tbl")
     versioned_write(spark, _df(spark, [1, 2]), t)
     versioned_write(spark, _df(spark, [3]), t)

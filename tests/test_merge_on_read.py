@@ -314,10 +314,10 @@ def test_mor_survives_delta_manifest_chain(spark, tmp_path, monkeypatch):
     """deletes_adds on a delta manifest folds down the chain: later
     delta APPENDS keep masking, and a vacuum checkpoint materializes the
     accumulated entries."""
-    from procurement_data_pipeline_spark.operators import versioning as V
+    from procurement_data_pipeline_spark.operators import tablelog
 
-    monkeypatch.setattr(V, "_DELTA_MIN_FILES", 1)
-    monkeypatch.setattr(V, "_CHECKPOINT_EVERY", 100)
+    monkeypatch.setattr(tablelog, "_DELTA_MIN_FILES", 1)
+    monkeypatch.setattr(tablelog, "_CHECKPOINT_EVERY", 100)
     t = str(tmp_path / "t")
     versioned_write(spark, _df(spark, [(1, "a"), (2, "b")]), t)
     merge_into(  # v2: MOR delete as a DELTA manifest

@@ -140,13 +140,13 @@ def test_streaming_sink_under_delta_manifests(spark, tmp_path, monkeypatch):
     logs only its adds, the stream identity keys survive in the raw
     delta manifests (so lost-checkpoint replay still no-ops), and reads
     resolve exactly."""
-    from procurement_data_pipeline_spark.operators import versioning as V
+    from procurement_data_pipeline_spark.operators import tablelog
     from procurement_data_pipeline_spark.operators.versioning import (
         read_manifest as _read_manifest,
     )
 
-    monkeypatch.setattr(V, "_DELTA_MIN_FILES", 0)
-    monkeypatch.setattr(V, "_CHECKPOINT_EVERY", 100)
+    monkeypatch.setattr(tablelog, "_DELTA_MIN_FILES", 0)
+    monkeypatch.setattr(tablelog, "_CHECKPOINT_EVERY", 100)
     src, table = str(tmp_path / "src"), str(tmp_path / "tbl")
     ckpt = str(tmp_path / "ckpt")
     _write_sources(spark, src)

@@ -4,6 +4,7 @@ optimistic concurrency, vacuum, and crash-window invisibility."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -701,10 +702,10 @@ def test_cluster_by_gives_partition_pruning_semantics(spark, tmp_path):
 def delta_mode(monkeypatch):
     """Force incremental manifests at toy scale: every table qualifies,
     checkpoint every 4th version."""
-    from procurement_data_pipeline_spark.operators import versioning as V
+    from procurement_data_pipeline_spark.operators import tablelog
 
-    monkeypatch.setattr(V, "_DELTA_MIN_FILES", 0)
-    monkeypatch.setattr(V, "_CHECKPOINT_EVERY", 4)
+    monkeypatch.setattr(tablelog, "_DELTA_MIN_FILES", 0)
+    monkeypatch.setattr(tablelog, "_CHECKPOINT_EVERY", 4)
 
 
 def test_delta_manifest_append_chain(spark, tmp_path, delta_mode):
@@ -833,15 +834,18 @@ def test_extra_metadata_reserved_keys_fixed_set(spark, tmp_path, monkeypatch):
     delta manifest carries no 'files'/'stats' key, so instance-keyed
     checking would let extra={'stats': ...} through and plan_scan's
     n_rows==0 skip would then drop files based on injected stats."""
-    from procurement_data_pipeline_spark.operators import versioning as V
+    from procurement_data_pipeline_spark.operators import tablelog
 
-    monkeypatch.setattr(V, "_DELTA_MIN_FILES", 0)
+    monkeypatch.setattr(tablelog, "_DELTA_MIN_FILES", 0)
     t = str(tmp_path / "tbl")
     versioned_write(spark, _df(spark, [1]), t)
+    commit_dirs = sorted(n for n in os.listdir(t) if n.startswith("commit-"))
     # v2 is a delta manifest (no 'files'/'stats' keys in the instance)
     for key in ("stats", "files", "stats_adds", "adds"):
         with pytest.raises(ValueError, match="reserved manifest keys"):
             versioned_write(spark, _df(spark, [2]), t, extra={key: {}})
+    # a refused call writes nothing: no orphan commit dir is left behind
+    assert sorted(n for n in os.listdir(t) if n.startswith("commit-")) == commit_dirs
     # benign metadata still passes through
     man = versioned_write(spark, _df(spark, [2]), t, extra={"job_id": "j7"})
     assert man["job_id"] == "j7"

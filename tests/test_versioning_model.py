@@ -59,10 +59,10 @@ def test_random_walk_matches_model(spark, tmp_path, seed, manifests, monkeypatch
         # logs adds/removes, checkpoint every 3rd version — the random
         # walk then exercises delta resolution under arbitrary
         # interleavings including rollback/vacuum checkpointing
-        from procurement_data_pipeline_spark.operators import versioning as V
+        from procurement_data_pipeline_spark.operators import tablelog
 
-        monkeypatch.setattr(V, "_DELTA_MIN_FILES", 0)
-        monkeypatch.setattr(V, "_CHECKPOINT_EVERY", 3)
+        monkeypatch.setattr(tablelog, "_DELTA_MIN_FILES", 0)
+        monkeypatch.setattr(tablelog, "_CHECKPOINT_EVERY", 3)
     rng = random.Random(seed)
     t = str(tmp_path / f"tbl{seed}{manifests}")
     next_id = 0
